@@ -286,9 +286,12 @@ def check_segmented(seg, deep: bool = False) -> pd.DataFrame:
       kill-filtered flat rows match the tombstone-corrected lexicon
       exactly (zero mismatching terms via a full outer comparison).
 
-    Per segment (delta-scale, so a sequential loop like Lucene's):
-    stats.json vs docmeta count/Σdoc_len, lexicon df/cf vs the retained
-    flat rows, and postings block sums vs lexicon df."""
+    Per segment (delta-scale, so a sequential loop like Lucene's): the
+    tombstone file's row count vs stats.json; then, for segments that
+    carry adds (a tombstone-only segment, ``n_docs == 0``, holds no
+    add-side tables), stats.json vs docmeta count/Σdoc_len, lexicon
+    df/cf vs the retained flat rows, and postings block sums vs
+    lexicon df."""
     import json as _json
     import os as _os
 
@@ -306,6 +309,13 @@ def check_segmented(seg, deep: bool = False) -> pd.DataFrame:
         tag = f"seg{i}:{_os.path.basename(d)}"
         with open(_os.path.join(d, "stats.json")) as f:
             st = _json.load(f)
+        dl_ids = _os.path.join(d, "deletes.parquet")
+        if _os.path.isdir(dl_ids):
+            ndel = spark.read.parquet(dl_ids).count()
+            add(f"{tag}:tombstone_count", ndel == st.get("del_n_docs", 0),
+                f"file={ndel} stats={st.get('del_n_docs', 0)}")
+        if st["n_docs"] == 0:
+            continue  # tombstone-only segment: no add-side tables
         dm = spark.read.parquet(_os.path.join(d, "docmeta.parquet"))
         drow = dm.agg(
             F.count("*").alias("n"),
@@ -339,11 +349,6 @@ def check_segmented(seg, deep: bool = False) -> pd.DataFrame:
             ).count()
         )
         add(f"{tag}:blocks_match_df", bad_blocks == 0, f"bad_terms={bad_blocks}")
-        dl_ids = _os.path.join(d, "deletes.parquet")
-        if _os.path.isdir(dl_ids):
-            ndel = spark.read.parquet(dl_ids).count()
-            add(f"{tag}:tombstone_count", ndel == st.get("del_n_docs", 0),
-                f"file={ndel} stats={st.get('del_n_docs', 0)}")
 
     # merged stats arithmetic (driver ints vs the recomputed live view)
     live = seg.docmeta.agg(

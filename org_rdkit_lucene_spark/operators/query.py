@@ -39,12 +39,30 @@ from org_rdkit_lucene_spark.operators.build import InvertedIndex
 RESULT_SCHEMA = "query_id int, rank int, doc_id long, score_q long"
 
 
+def dead_versions(
+    kill: tuple[np.ndarray, np.ndarray], docs: np.ndarray, ords: np.ndarray
+) -> np.ndarray:
+    """The ONE kill-filter law both decode kernels (this module's and
+    the WAND kernel's) apply: a tombstone from segment ordinal j kills
+    every version of its doc_id with ordinal < j. ``kill`` = the view's
+    (sorted doc_ids, kill_ords); ``docs``/``ords`` are per-posting doc
+    ids and segment ordinals. Returns the dead mask."""
+    kill_ids, kill_ords = kill
+    if not len(kill_ids):
+        return np.zeros(len(docs), dtype=bool)
+    kpos = np.minimum(np.searchsorted(kill_ids, docs), len(kill_ids) - 1)
+    return (kill_ids[kpos] == docs) & (kill_ords[kpos] > ords)
+
+
 def _make_decode_blocks(
-    codec: str = "varbyte", with_ord: bool = False, term_ids: dict | None = None
+    codec: str = "varbyte",
+    term_ids: dict | None = None,
+    kill: tuple[np.ndarray, np.ndarray] | None = None,
 ):
     """Arrow-batched block decode: postings blocks → (term, doc_id, tf,
-    dl[, seg_ord]) — seg_ord carried through when decoding a segmented
-    view so tombstoned versions can be dropped downstream.
+    dl). With ``kill`` (a segmented view's kill pairs) the blocks carry
+    ``seg_ord`` and tombstoned versions are dropped inside the batch
+    (:func:`dead_versions`), so no kill-map join follows the decode.
 
     With ``term_ids`` (a driver-side term → int32 map over the query's
     term set), the kernel emits a ``tid`` int column instead of a
@@ -56,11 +74,10 @@ def _make_decode_blocks(
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            docs_l, tfs_l, dls_l, terms_l, ords_l = [], [], [], [], []
-            ords = pdf["seg_ord"] if with_ord else np.zeros(len(pdf), dtype=np.int32)
-            for term, first, n, db, tb, lb, so in zip(
+            docs_l, tfs_l, dls_l, terms_l = [], [], [], []
+            for term, first, n, db, tb, lb in zip(
                 pdf["term"], pdf["first_doc"], pdf["n"], pdf["doc_bytes"],
-                pdf["tf_bytes"], pdf["dl_bytes"], ords,
+                pdf["tf_bytes"], pdf["dl_bytes"],
             ):
                 docs_l.append(delta_decode(int(first), bytes(db), int(n), codec))
                 tfs_l.append(decode_ints(bytes(tb), codec).astype(np.int32))
@@ -69,16 +86,18 @@ def _make_decode_blocks(
                     terms_l.append(np.repeat(np.asarray([term], dtype=object), int(n)))
                 else:
                     terms_l.append(np.full(int(n), term_ids[term], dtype=np.int32))
-                if with_ord:
-                    ords_l.append(np.full(int(n), int(so), dtype=np.int32))
             out = {
                 ("term" if term_ids is None else "tid"): np.concatenate(terms_l),
                 "doc_id": np.concatenate(docs_l),
                 "tf": np.concatenate(tfs_l),
                 "dl": np.concatenate(dls_l),
             }
-            if with_ord:
-                out["seg_ord"] = np.concatenate(ords_l)
+            if kill is not None:
+                ords = np.repeat(
+                    pdf["seg_ord"].to_numpy(np.int64), pdf["n"].to_numpy(np.int64)
+                )
+                keep = ~dead_versions(kill, out["doc_id"], ords)
+                out = {c: v[keep] for c, v in out.items()}
             yield pd.DataFrame(out)
 
     return _decode_blocks
@@ -92,29 +111,19 @@ def decoded_postings(
     The ``isin`` filter is pushed into the parquet scan (PushedFilters),
     so only the query terms' blocks are read — the Spark analog of
     Lucene seeking the term dictionary instead of scanning segments.
-    On a segmented view with tombstones, decoded rows keep their
-    segment ordinal and dead versions (ordinal < the tombstone's) are
-    dropped with a broadcast join against the delta-scale kill map.
+    On a segmented view with tombstones, the decode batch drops dead
+    versions against the view's kill pairs (bounded by
+    ``MAX_KILL_PAIRS``, exactly as the WAND kernel is).
     ``term_ids`` switches the term column to the int fast path (see
     :func:`_make_decode_blocks`)."""
     blocks = index.postings.filter(F.col("term").isin(list(set(terms))))
-    codec = getattr(index, "codec", "varbyte")
-    kill = getattr(index, "kill_map", None)
+    kill = index.kill_pairs() if hasattr(index, "kill_pairs") else None
     tcol = "term string" if term_ids is None else "tid int"
-    tname = tcol.split()[0]
-    if kill is None:
-        return blocks.mapInPandas(
-            _make_decode_blocks(codec, term_ids=term_ids),
-            schema=f"{tcol}, doc_id long, tf int, dl int",
-        )
-    flat = blocks.mapInPandas(
-        _make_decode_blocks(codec, with_ord=True, term_ids=term_ids),
-        schema=f"{tcol}, doc_id long, tf int, dl int, seg_ord int",
-    )
-    return (
-        flat.join(F.broadcast(kill), "doc_id", "left")
-        .filter(F.col("kill_ord").isNull() | (F.col("seg_ord") >= F.col("kill_ord")))
-        .select(tname, "doc_id", "tf", "dl")
+    return blocks.mapInPandas(
+        _make_decode_blocks(
+            getattr(index, "codec", "varbyte"), term_ids=term_ids, kill=kill
+        ),
+        schema=f"{tcol}, doc_id long, tf int, dl int",
     )
 
 
@@ -455,20 +464,6 @@ def _norm_synonym(word: str, profile) -> str:
     return toks[0]
 
 
-# Pre-partition the member-joined postings by (query_id, doc_id) so
-# BOTH synonym aggregations ride ONE exchange — HashPartitioning(q, d)
-# satisfies ClusteredDistribution(q, gid, d), so the group-tf AND the
-# per-doc aggregation reuse the same shuffle. The cost is losing the
-# map-side partial combine on the first agg, which is cheap here: a
-# doc rarely matches more than one member of the same group, so
-# partials barely shrink the stream. Interleaved A/B at 200k docs,
-# 20 queries, one JVM (samples alternating off/on):
-# off 16.37/16.67/16.05s, on 16.45/15.13/13.82s — one exchange is
-# never slower and trends ~5-10% faster; at network-shuffle scale the
-# saved exchange is a whole stage.
-_SYN_SINGLE_EXCHANGE = True
-
-
 def search_synonyms(
     index: InvertedIndex,
     queries: list[tuple[int, str, int]],
@@ -497,7 +492,7 @@ def search_synonyms(
     broadcast (query, gid, tid) table maps members to groups, tf sums
     per (query, gid, doc) BEFORE the saturation (the one semantic
     that needs its own aggregation), then the usual per-(query, doc)
-    sum. Both aggregations get map-side partials; everything stays in
+    sum, both on one (query_id, doc_id) exchange; everything stays in
     codegen."""
     spark = index.spark
     prof = index.cfg.tokenizer
@@ -571,11 +566,15 @@ def search_synonyms(
         )
     )
     flat = decoded_postings(index, all_terms, term_ids=term_ids)
-    joined = flat.join(mdf, "tid")
-    if _SYN_SINGLE_EXCHANGE:
-        joined = joined.repartition("query_id", "doc_id")
+    # pre-partition by (query_id, doc_id) so BOTH aggregations ride ONE
+    # exchange: HashPartitioning(q, d) satisfies ClusteredDistribution
+    # (q, gid, d). The first agg loses its map-side partial, which is
+    # cheap (a doc rarely matches two members of one group). Interleaved
+    # A/B at 200k docs, 20 queries: one exchange was never slower and
+    # ~5-10% faster; at network-shuffle scale it saves a whole stage.
     grouped = (
-        joined
+        flat.join(mdf, "tid")
+        .repartition("query_id", "doc_id")
         .groupBy("query_id", "gid", "doc_id")
         .agg(F.sum("tf").alias("gtf"), F.max("dl").alias("dl"))
     )
@@ -3064,8 +3063,8 @@ def search_block_join(
 
     ``after`` = {query_id: (score_q, parent)} pages the parent ranking
     with the reference's query-agnostic keyset law (searchAfter): only
-    parents strictly after the cursor in (score_q DESC, parent ASC)
-    order are admitted, BEFORE the prune/window stages — a pure filter
+    parents strictly after the cursor in (score_q DESC, parent ASC
+    NULLS LAST) order are admitted (``parent`` None = the NULL group), BEFORE the prune/window stages — a pure filter
     on the aggregated stream, so the rank bounds stay valid and
     page1 + page2 == top-2k exactly (tested)."""
     if score_mode not in BLOCK_JOIN_MODES:
@@ -3100,10 +3099,16 @@ def search_block_join(
     if after:
         cur = F.broadcast(
             index.spark.createDataFrame(
-                [(int(q), int(s), str(p)) for q, (s, p) in after.items()],
+                [
+                    (int(q), int(s), None if p is None else str(p))
+                    for q, (s, p) in after.items()
+                ],
                 "query_id int, cs long, cp string",
             )
         )
+        # strictly after (cs, cp) in (score_q DESC, parent ASC NULLS
+        # LAST): on a score tie a NULL parent follows every non-NULL
+        # cursor, and nothing follows a NULL cursor
         parents = (
             parents.join(cur, "query_id", "left")
             .filter(
@@ -3111,7 +3116,10 @@ def search_block_join(
                 | (F.col("score_q") < F.col("cs"))
                 | (
                     (F.col("score_q") == F.col("cs"))
-                    & (F.col("parent") > F.col("cp"))
+                    & (
+                        (F.col("parent") > F.col("cp"))
+                        | (F.col("parent").isNull() & F.col("cp").isNotNull())
+                    )
                 )
             )
             .drop("cs", "cp")

@@ -50,7 +50,11 @@ from pyspark.sql import functions as F
 
 from org_rdkit_lucene_spark.functions.codecs import decode_ints_many
 from org_rdkit_lucene_spark.operators.build import InvertedIndex
-from org_rdkit_lucene_spark.operators.query import RESULT_SCHEMA, tokenize_queries
+from org_rdkit_lucene_spark.operators.query import (
+    RESULT_SCHEMA,
+    dead_versions,
+    tokenize_queries,
+)
 
 
 def _make_kernel(
@@ -63,8 +67,6 @@ def _make_kernel(
     kill: tuple[np.ndarray, np.ndarray] | None = None,
     after: dict[int, tuple[int, int]] | None = None,
 ):
-    kill_ids, kill_ords = kill if kill is not None else (None, None)
-
     def shard_kernel(spdf: pd.DataFrame) -> pd.DataFrame:
         """One SHARD group holding every query's block rows: queries
         share a raw-decode cache (docs + query-independent tf_norm per
@@ -197,14 +199,10 @@ def _make_kernel(
             tfs = tf_all.astype(np.float64)
             dls = dl_all.astype(np.float64)
             n_kept = n_per
-            if kill_ids is not None and len(kill_ids):
-                # drop tombstoned versions: a kill from segment
-                # ordinal j removes docs of blocks with ordinal < j
-                kpos = np.minimum(
-                    np.searchsorted(kill_ids, docs_all), len(kill_ids) - 1
-                )
-                el_ords = np.repeat(seg_ords[idx], n_per)
-                dead = (kill_ids[kpos] == docs_all) & (kill_ords[kpos] > el_ords)
+            if kill is not None:
+                # drop tombstoned versions (one kill law, shared with
+                # the DataFrame path's decode batch)
+                dead = dead_versions(kill, docs_all, np.repeat(seg_ords[idx], n_per))
                 if dead.any():
                     keep = ~dead
                     block_of_el = np.repeat(np.arange(len(idx)), n_per)[keep]

@@ -24,8 +24,21 @@ Versioning law: a tombstone written by segment ordinal *j* kills every
 version of that doc_id with ordinal < *j*. Delete-then-add puts the
 tombstone and the re-add in the SAME segment, so the re-added version
 (ordinal *j*) survives; a pure delete (:func:`delete_docs`) writes a
-tombstone with no re-add. After filtering, each live doc_id appears in
-exactly one segment's postings.
+TOMBSTONE-ONLY segment — ``deletes.parquet`` and ``stats.json``
+(``n_docs == 0``), no add-side tables — like a remove-only commit.
+The view's unions skip every segment with ``n_docs == 0`` (older
+delete segments that hold empty tables included), while ordinals stay
+position + 1 over ALL segments. After filtering, each live doc_id
+appears in exactly one segment's postings.
+
+One kill law, resolved once per view: the view reads every
+``deletes.parquet`` once into sorted ``(doc_ids, kill_ords)`` arrays
+(:meth:`SegmentedIndex.kill_pairs`). Both query kernels — the
+DataFrame path's decode batch and the WAND kernel — drop dead versions
+inside their Arrow batch with the same ``searchsorted`` test
+(:func:`operators.query.dead_versions`); the ``kill_map`` DataFrame
+that the docmeta/lexicon/flat/positions views join is built once from
+the same arrays and cached on the view.
 
 Rank identity with a full rebuild over the UPDATED corpus is exact:
 
@@ -43,9 +56,12 @@ Rank identity with a full rebuild over the UPDATED corpus is exact:
   stored ``(max_tf, min_dl)``.
 
 Scale note: tombstone volume is bounded by stream volume since the
-last :func:`compact` (the kill map is broadcast to the decode /
-kernel); compaction folds segments + tombstones into a fresh
-monolithic base — the analog of Lucene's background segment merge.
+last :func:`compact`. The kill pairs live on the driver (16 bytes a
+pair) and ship inside both kernels' closures; the query paths refuse a
+map past ``MAX_KILL_PAIRS`` (writers and :func:`compact` read it
+unbounded — compaction is the remedy). Compaction folds segments +
+tombstones into a fresh monolithic base — the analog of Lucene's
+background segment merge.
 
 Tested: ``tests/test_streaming_incremental.py`` (append-only rank
 identity + restart idempotence) and ``tests/test_upsert.py`` (update/
@@ -55,6 +71,7 @@ byte-equivalence).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -62,6 +79,7 @@ from contextlib import ExitStack
 from dataclasses import dataclass, field
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -77,7 +95,6 @@ from org_rdkit_lucene_spark.operators.build import (
     encode_postings,
 )
 from org_rdkit_lucene_spark.operators.positions import (
-    PACKED_SCHEMA as POSITIONS_SCHEMA,
     POSITIONS_NAME,
     _as_packed as _as_packed_cols,
     packed_positions_df,
@@ -135,6 +152,16 @@ def list_segments(index_dir: str) -> list[str]:
     )
 
 
+def _commit_stats(d: str, stats: dict) -> None:
+    """Write ``stats.json`` — every writer's commit record — LAST and
+    atomically (tmp + ``os.replace``): a directory without it is never
+    read as complete (:func:`list_segments`, ``InvertedIndex.load``)."""
+    tmp = os.path.join(d, "stats.json.tmp")
+    with open(tmp, "w") as f:
+        json.dump(stats, f)
+    os.replace(tmp, os.path.join(d, "stats.json"))
+
+
 def _prior_view(
     spark: SparkSession, base_dir: str, ordinal: float, cfg: IndexConfig
 ) -> "SegmentedIndex":
@@ -146,10 +173,6 @@ def _prior_view(
     base = InvertedIndex.load(spark, base_dir, cfg)
     prior = [d for d in list_segments(base_dir) if seg_ordinal(d) < ordinal]
     return SegmentedIndex(spark, base, prior)
-
-
-def _empty(spark: SparkSession, schema: str) -> DataFrame:
-    return spark.createDataFrame([], schema)
 
 
 def build_segment(
@@ -337,21 +360,15 @@ def _build_segment_locked(
             min_parts=n_parts,
         )
 
-    tmp = os.path.join(seg_dir, "stats.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "n_docs": n,
-                "total_dl": total_dl,
-                "avgdl": seg_avgdl,
-                "max_doc_id": int(stats_row["max_id"] if stats_row["max_id"] is not None else -1),
-                "del_n_docs": del_n,
-                "del_total_dl": del_dl,
-                "ordinal": ordinal,
-            },
-            f,
-        )
-    os.replace(tmp, os.path.join(seg_dir, "stats.json"))
+    _commit_stats(seg_dir, {
+        "n_docs": n,
+        "total_dl": total_dl,
+        "avgdl": seg_avgdl,
+        "max_doc_id": int(stats_row["max_id"] if stats_row["max_id"] is not None else -1),
+        "del_n_docs": del_n,
+        "del_total_dl": del_dl,
+        "ordinal": ordinal,
+    })
     if id_col is None:
         ids.unpersist()
 
@@ -431,26 +448,12 @@ def _delete_ids_df_locked(spark, base_index_dir, ids, cfg, seg_name):
         os.path.join(seg_dir, "deletes.parquet")
     )
     deld.unpersist()
-    # empty add-side tables keep the segment surface uniform
-    _empty(spark, "doc_id long, repo string, path string, commit string, lang string, "
-                  "sha256 string, doc_len int").write.mode("overwrite").parquet(
-        os.path.join(seg_dir, "docmeta.parquet"))
-    _empty(spark, "term string, df long, cf long").write.mode("overwrite").parquet(
-        os.path.join(seg_dir, "lexicon.parquet"))
-    _empty(spark, "doc_id long, term string, tf int, dl int").write.mode(
-        "overwrite").parquet(os.path.join(seg_dir, "flat.parquet"))
-    _empty(spark, POSTINGS_SCHEMA).write.mode("overwrite").parquet(
-        os.path.join(seg_dir, "postings.parquet"))
-    _empty(spark, POSITIONS_SCHEMA).write.mode("overwrite").parquet(
-        os.path.join(seg_dir, POSITIONS_NAME))
-    tmp = os.path.join(seg_dir, "stats.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(
-            {"n_docs": 0, "total_dl": 0, "avgdl": 0.0, "max_doc_id": -1,
-             "del_n_docs": del_n, "del_total_dl": del_dl, "ordinal": ordinal},
-            f,
-        )
-    os.replace(tmp, os.path.join(seg_dir, "stats.json"))
+    # a tombstone-only segment: no add-side tables (stats n_docs == 0
+    # is what SegmentedIndex keys on to leave it out of every union)
+    _commit_stats(seg_dir, {
+        "n_docs": 0, "total_dl": 0, "avgdl": 0.0, "max_doc_id": -1,
+        "del_n_docs": del_n, "del_total_dl": del_dl, "ordinal": ordinal,
+    })
     return seg_dir
 
 
@@ -491,7 +494,11 @@ class SegmentedIndex:
     """Base index + delta segments (with tombstones) behind the
     :class:`InvertedIndex` query surface — ``search``/``search_wand``/
     ``hit_counts``/``search_two_phase`` work unchanged over the merged
-    view; dead (tombstoned) versions are filtered everywhere."""
+    view; dead (tombstoned) versions are filtered everywhere.
+
+    A segment's version ordinal is its position + 1 over ALL segments;
+    only segments that carry adds (``stats.json`` ``n_docs > 0``) enter
+    the table unions, so a tombstone-only segment costs no scan."""
 
     spark: SparkSession
     base: InvertedIndex
@@ -505,21 +512,27 @@ class SegmentedIndex:
 
     def __post_init__(self) -> None:
         n, dl, mx = self.base.n_docs, self.base.total_dl, self.base.max_doc_id
-        self.has_deletes = False
         tomb = 0
-        for d in self.segment_dirs:
+        # (ordinal, dir) of the segments holding adds / tombstones
+        self._add_segs: list[tuple[int, str]] = []
+        self._del_segs: list[tuple[int, str]] = []
+        for i, d in enumerate(self.segment_dirs):
             with open(os.path.join(d, "stats.json")) as f:
                 s = json.load(f)
             n += s["n_docs"] - s.get("del_n_docs", 0)
             dl += s["total_dl"] - s.get("del_total_dl", 0)
             mx = max(mx, s["max_doc_id"])
-            if s.get("del_n_docs", 0) > 0:
-                self.has_deletes = True
             tomb += s.get("del_n_docs", 0)
+            if s["n_docs"] > 0:
+                self._add_segs.append((i + 1, d))
+            if s.get("del_n_docs", 0) > 0:
+                self._del_segs.append((i + 1, d))
         self.n_docs, self.total_dl, self.max_doc_id = n, dl, mx
         self.n_tombstones = tomb
+        self.has_deletes = bool(self._del_segs)
         self.avgdl = (dl / n) if n else 0.0
-        self._kill_pairs_cache: tuple[np.ndarray, np.ndarray] | None = None
+        self._kill_arrays: tuple[np.ndarray, np.ndarray] | None = None
+        self._kill_map: DataFrame | None = None
 
     def tombstone_frac(self) -> float:
         """Tombstoned versions as a fraction of live docs — the metric
@@ -562,47 +575,67 @@ class SegmentedIndex:
 
     # -- version ordinals & tombstones ------------------------------------
 
-    def _seg_df(self, d: str, name: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(d, f"{name}.parquet"))
-
     def _union(self, name: str, with_ord: bool = False) -> DataFrame:
+        """The base table plus every add-carrying segment's, optionally
+        tagged with its version ordinal ``seg_ord`` (base = 0)."""
         df = getattr(self.base, name)
         if with_ord:
             df = df.withColumn("seg_ord", F.lit(0))
-        for i, d in enumerate(self.segment_dirs):
-            s = self._seg_df(d, name)
+        for o, d in self._add_segs:
+            s = self.spark.read.parquet(os.path.join(d, f"{name}.parquet"))
             if with_ord:
-                s = s.withColumn("seg_ord", F.lit(i + 1))
+                s = s.withColumn("seg_ord", F.lit(o))
             df = df.unionByName(s, allowMissingColumns=True)
         return df
+
+    def _kill_pairs_unbounded(self) -> tuple[np.ndarray, np.ndarray]:
+        """(sorted doc_ids, kill_ords), read ONCE per view: every
+        tombstone-carrying segment's ``deletes.parquet`` is read on the
+        driver (pyarrow, no Spark job) and a doc tombstoned by several
+        segments keeps its highest ordinal. Writers and compaction use
+        this directly — compaction is the remedy for an over-budget
+        map, so it must not be refused one."""
+        if self._kill_arrays is None:
+            import pyarrow.parquet as pq
+
+            ids_l, ords_l = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+            for o, d in self._del_segs:
+                ids = pq.read_table(
+                    os.path.join(d, "deletes.parquet"), columns=["doc_id"]
+                ).column("doc_id").to_numpy()
+                ids_l.append(ids.astype(np.int64))
+                ords_l.append(np.full(len(ids), o, dtype=np.int64))
+            ids, ords = np.concatenate(ids_l), np.concatenate(ords_l)
+            o = np.lexsort((ords, ids))
+            ids, ords = ids[o], ords[o]
+            last = np.append(ids[1:] != ids[:-1], True)
+            self._kill_arrays = (ids[last], ords[last])
+        return self._kill_arrays
 
     @property
     def kill_map(self) -> DataFrame | None:
         """(doc_id, kill_ord): a tombstone from segment ordinal j kills
-        every version with ordinal < j. None when no segment deletes
-        anything (the append-only fast path — zero overhead)."""
+        every version with ordinal < j. Built once per view from the
+        driver-side kill pairs (a local relation — no parquet scan or
+        aggregation per access). None when no segment deletes anything
+        (the append-only fast path — zero overhead)."""
         if not self.has_deletes:
             return None
-        parts = []
-        for i, d in enumerate(self.segment_dirs):
-            p = os.path.join(d, "deletes.parquet")
-            if os.path.isdir(p):
-                parts.append(
-                    self.spark.read.parquet(p).withColumn("ord", F.lit(i + 1))
-                )
-        if not parts:
-            return None
-        df = parts[0]
-        for x in parts[1:]:
-            df = df.unionByName(x)
-        return df.groupBy("doc_id").agg(F.max("ord").alias("kill_ord"))
+        if self._kill_map is None:
+            ids, ords = self._kill_pairs_unbounded()
+            self._kill_map = self.spark.createDataFrame(
+                pd.DataFrame({"doc_id": ids, "kill_ord": ords}),
+                "doc_id long, kill_ord long",
+            )
+        return self._kill_map
 
     def kill_pairs(self) -> tuple[np.ndarray, np.ndarray] | None:
-        """Driver-side (sorted doc_ids, kill_ords) for kernel use.
+        """Driver-side (sorted doc_ids, kill_ords) that both query
+        kernels filter with (:func:`operators.query.dead_versions`).
         Tombstone volume is bounded by stream volume since the last
-        compaction — and now STRUCTURALLY enforced, not just by
-        policy: past ``MAX_KILL_PAIRS`` tombstones this raises with a
-        compact() directive instead of silently materializing a
+        compaction — and STRUCTURALLY enforced on the query paths, not
+        just by policy: past ``MAX_KILL_PAIRS`` tombstones this raises
+        with a compact() directive instead of shipping a
         driver-OOM-sized map, and past the default ``maybe_compact``
         fraction it warns that compaction is overdue."""
         if not self.has_deletes:
@@ -623,54 +656,34 @@ class SegmentedIndex:
                 RuntimeWarning,
                 stacklevel=2,
             )
-        if self._kill_pairs_cache is None:
-            pdf = self.kill_map.toPandas()
-            ids = pdf["doc_id"].to_numpy(np.int64)
-            ords = pdf["kill_ord"].to_numpy(np.int64)
-            o = np.argsort(ids)
-            self._kill_pairs_cache = (ids[o], ords[o])
-        return self._kill_pairs_cache
+        return self._kill_pairs_unbounded()
 
-    def _flat_all(self) -> DataFrame:
-        """Every segment's flat rows with version ordinals (base = 0)."""
-        df = self.base.flat.withColumn("seg_ord", F.lit(0))
-        for i, d in enumerate(self.segment_dirs):
-            s = self._seg_df(d, "flat").select(*FLAT_COLS).withColumn(
-                "seg_ord", F.lit(i + 1)
-            )
-            df = df.unionByName(s)
-        return df
+    def _live(self, df: DataFrame) -> DataFrame:
+        """Drop the dead versions of a ``seg_ord``-tagged table (and the
+        tag)."""
+        kill = self.kill_map
+        if kill is not None:
+            df = df.join(F.broadcast(kill), "doc_id", "left").filter(
+                F.col("kill_ord").isNull() | (F.col("seg_ord") >= F.col("kill_ord"))
+            ).drop("kill_ord")
+        return df.drop("seg_ord")
 
     def live_flat(self) -> DataFrame:
         """Kill-filtered flat (doc_id, term, tf, dl) — exactly the rows
         a monolithic rebuild over the updated corpus would produce.
         Feeds compaction."""
-        flat = self._flat_all()
-        kill = self.kill_map
-        if kill is None:
-            return flat.select(*FLAT_COLS)
-        return (
-            flat.join(F.broadcast(kill), "doc_id", "left")
-            .filter(F.col("kill_ord").isNull() | (F.col("seg_ord") >= F.col("kill_ord")))
-            .select(*FLAT_COLS)
-        )
+        return self._live(self._union("flat", with_ord=True)).select(*FLAT_COLS)
 
     # -- merged tables -----------------------------------------------------
 
     @property
     def docmeta(self) -> DataFrame:
-        dm = self._union("docmeta", with_ord=True)
-        kill = self.kill_map
-        if kill is not None:
-            dm = dm.join(F.broadcast(kill), "doc_id", "left").filter(
-                F.col("kill_ord").isNull() | (F.col("seg_ord") >= F.col("kill_ord"))
-            ).drop("kill_ord")
-        return dm.drop("seg_ord")
+        return self._live(self._union("docmeta", with_ord=True))
 
     @property
     def postings(self) -> DataFrame:
         """Union of all segments' blocks (tagged with ``seg_ord`` so the
-        decode paths can drop tombstoned versions) with the block-max
+        decode kernels can drop tombstoned versions) with the block-max
         bound re-derived for the MERGED avgdl from stored
         (max_tf, min_dl) — the stored max_tf_norm was computed under
         each segment's own avgdl and is not a valid bound once stats
@@ -704,7 +717,7 @@ class SegmentedIndex:
         queries over a streamed/upserted index never read stored
         bodies. A doc updated in segment *j* contributes only its
         ordinal-*j* positions (the tombstone filter, same law as
-        docmeta). Raises when the base or any non-empty segment was
+        docmeta). Raises when the base or any add-carrying segment was
         built without positions — silently dropping a segment would
         return wrong phrase results, and the fix (rebuild the segment
         or compact) is a caller decision."""
@@ -716,27 +729,19 @@ class SegmentedIndex:
         df = _as_packed_cols(
             self.spark.read.parquet(os.path.join(self.index_dir, POSITIONS_NAME))
         ).withColumn("seg_ord", F.lit(0))
-        for i, d in enumerate(self.segment_dirs):
+        for o, d in self._add_segs:
             p = os.path.join(d, POSITIONS_NAME)
             if not os.path.isdir(p):
-                with open(os.path.join(d, "stats.json")) as f:
-                    if json.load(f)["n_docs"] > 0:
-                        raise FileNotFoundError(
-                            f"segment {d} was built without positions; "
-                            "re-index it with with_positions=True or compact()"
-                        )
-                continue
+                raise FileNotFoundError(
+                    f"segment {d} was built without positions; "
+                    "re-index it with with_positions=True or compact()"
+                )
             df = df.unionByName(
                 _as_packed_cols(self.spark.read.parquet(p)).withColumn(
-                    "seg_ord", F.lit(i + 1)
+                    "seg_ord", F.lit(o)
                 )
             )
-        kill = self.kill_map
-        if kill is not None:
-            df = df.join(F.broadcast(kill), "doc_id", "left").filter(
-                F.col("kill_ord").isNull() | (F.col("seg_ord") >= F.col("kill_ord"))
-            ).drop("kill_ord")
-        return df.drop("seg_ord")
+        return self._live(df)
 
     @property
     def lexicon(self) -> DataFrame:
@@ -753,7 +758,7 @@ class SegmentedIndex:
         kill = self.kill_map
         if kill is not None:
             dead = (
-                self._flat_all()
+                self._union("flat", with_ord=True)
                 .join(F.broadcast(kill), "doc_id")
                 .filter(F.col("seg_ord") < F.col("kill_ord"))
                 .groupBy("term")
@@ -778,6 +783,81 @@ class SegmentedIndex:
         )
 
 
+def _write_flat_run(
+    spark: SparkSession, flat: DataFrame, cfg: IndexConfig, out_dir: str, run_name: str
+) -> DataFrame:
+    """Stage 1 analog of a fold: ONE flat run, re-bucketed by the OUT
+    config's partition count and recorded in the manifest (a later
+    resume/compaction sees a coherent layout). Returns the run read
+    back, persisted for stages 3/4."""
+    flat_path = os.path.join(out_dir, "flat", run_name)
+    flat.withColumn(
+        "build_part",
+        F.pmod(F.xxhash64("doc_id"), F.lit(cfg.build_partitions)).cast("int"),
+    ).write.mode("overwrite").parquet(flat_path)
+    _write_manifest(
+        out_dir,
+        {
+            "completed_parts": list(range(cfg.build_partitions)),
+            "part_lineage": {
+                str(i): {"run_dir": run_name} for i in range(cfg.build_partitions)
+            },
+            "n_parts": cfg.build_partitions,
+            "finalized": True,
+        },
+    )
+    return spark.read.parquet(flat_path).select(*FLAT_COLS).persist()
+
+
+def _write_lexicon_postings(
+    flat: DataFrame, cfg: IndexConfig, out_dir: str, n_docs: int, avgdl: float,
+    max_doc_id: int,
+) -> None:
+    """Stages 3 and 4 of a fold with the batch build's expressions: the
+    lexicon (idf under ``n_docs``), then the postings (identical
+    hot/cold policy). Unpersists ``flat``."""
+    import pyarrow.parquet as pq
+
+    lexicon_path = os.path.join(out_dir, "lexicon.parquet")
+    lex = flat.groupBy("term").agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
+    lex = lex.withColumn(
+        "idf",
+        F.log(
+            F.lit(1.0)
+            + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
+            / (F.col("df") + F.lit(0.5))
+        ),
+    )
+    lex.write.mode("overwrite").parquet(lexicon_path)
+    hot_tbl = pq.read_table(
+        lexicon_path, columns=["term"], filters=[("df", ">=", cfg.hot_term_df)]
+    )
+    blocks = encode_postings(
+        flat, cfg, avgdl, max_doc_id, hot_tbl.column("term").to_pylist()
+    )
+    blocks.write.mode("overwrite").parquet(os.path.join(out_dir, "postings.parquet"))
+    flat.unpersist()
+
+
+def _commit_index(
+    spark: SparkSession, out_dir: str, cfg: IndexConfig, n_docs: int,
+    total_dl: int, avgdl: float, max_doc_id: int,
+) -> InvertedIndex:
+    """Commit a folded index (stats.json LAST: a crash mid-fold never
+    leaves a dir that ``InvertedIndex.load`` accepts as complete)."""
+    _commit_stats(out_dir, {
+        "n_docs": n_docs,
+        "total_dl": total_dl,
+        "avgdl": avgdl,
+        "max_doc_id": max_doc_id,
+        "codec": cfg.codec,
+    })
+    return InvertedIndex(
+        spark, out_dir, n_docs, avgdl, cfg,
+        total_dl=total_dl, max_doc_id=max_doc_id, codec=cfg.codec,
+    )
+
+
 def compact(
     spark: SparkSession, index_dir: str, cfg: IndexConfig, out_dir: str
 ) -> InvertedIndex:
@@ -788,39 +868,19 @@ def compact(
     from-scratch batch build over the updated corpus: live_flat()
     reproduces the rebuild's flat rows exactly, and stage 3/4 encoding
     is deterministic given (flat, cfg, avgdl)."""
-    import pyarrow.parquet as pq
-
     with ExitStack() as _locks:
         # lock the SOURCE (no segment may land mid-fold: the fold's
         # live view must be a consistent snapshot) and the destination
         _locks.enter_context(write_lock(index_dir))
         if os.path.abspath(out_dir) != os.path.abspath(index_dir):
             _locks.enter_context(write_lock(out_dir))
-        return _compact_locked(spark, index_dir, cfg, out_dir, pq)
+        return _compact_locked(spark, index_dir, cfg, out_dir)
 
 
-def _compact_locked(spark, index_dir, cfg, out_dir, pq):
+def _compact_locked(spark, index_dir, cfg, out_dir):
     seg = SegmentedIndex.load(spark, index_dir, cfg)
     os.makedirs(out_dir, exist_ok=True)
-
-    # stage 1 analog: one compacted flat run, manifest-recorded
-    run_name = "run-compact"
-    flat_path = os.path.join(out_dir, "flat", run_name)
-    live = seg.live_flat().withColumn(
-        "build_part",
-        F.pmod(F.xxhash64("doc_id"), F.lit(cfg.build_partitions)).cast("int"),
-    )
-    live.write.mode("overwrite").parquet(flat_path)
-    manifest = {
-        "completed_parts": list(range(cfg.build_partitions)),
-        "part_lineage": {
-            str(i): {"run_dir": run_name} for i in range(cfg.build_partitions)
-        },
-        "n_parts": cfg.build_partitions,
-        "finalized": True,
-    }
-    _write_manifest(out_dir, manifest)
-    flat = spark.read.parquet(flat_path).select(*FLAT_COLS).persist()
+    flat = _write_flat_run(spark, seg.live_flat(), cfg, out_dir, "run-compact")
 
     # docmap + docmeta from the live view (sha256 preserved — content
     # is not needed for compaction)
@@ -833,27 +893,7 @@ def _compact_locked(spark, index_dir, cfg, out_dir, pq):
     dm.write.mode("overwrite").parquet(os.path.join(out_dir, "docmeta.parquet"))
     dm.unpersist()
 
-    # stage 3: lexicon (same expression as the batch build)
-    lexicon_path = os.path.join(out_dir, "lexicon.parquet")
-    lex = flat.groupBy("term").agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
-    lex = lex.withColumn(
-        "idf",
-        F.log(
-            F.lit(1.0)
-            + (F.lit(float(seg.n_docs)) - F.col("df") + F.lit(0.5))
-            / (F.col("df") + F.lit(0.5))
-        ),
-    )
-    lex.write.mode("overwrite").parquet(lexicon_path)
-
-    # stage 4: postings (identical hot/cold policy as the batch build)
-    hot_tbl = pq.read_table(
-        lexicon_path, columns=["term"], filters=[("df", ">=", cfg.hot_term_df)]
-    )
-    hot_terms = hot_tbl.column("term").to_pylist()
-    blocks = encode_postings(flat, cfg, seg.avgdl, seg.max_doc_id, hot_terms)
-    blocks.write.mode("overwrite").parquet(os.path.join(out_dir, "postings.parquet"))
-    flat.unpersist()
+    _write_lexicon_postings(flat, cfg, out_dir, seg.n_docs, seg.avgdl, seg.max_doc_id)
 
     # positional postings survive compaction when the source index has
     # them: the kill-filtered union IS the rebuild's positions row set
@@ -878,25 +918,8 @@ def _compact_locked(spark, index_dir, cfg, out_dir, pq):
             os.path.join(out_dir, POSITIONS_NAME)
         )
 
-    # stats.json is the commit record and is written LAST (same
-    # atomicity convention as build_segment): a crash mid-compaction
-    # must not leave a dir that InvertedIndex.load accepts as complete
-    tmp = os.path.join(out_dir, "stats.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "n_docs": seg.n_docs,
-                "total_dl": seg.total_dl,
-                "avgdl": seg.avgdl,
-                "max_doc_id": seg.max_doc_id,
-                "codec": cfg.codec,
-            },
-            f,
-        )
-    os.replace(tmp, os.path.join(out_dir, "stats.json"))
-    return InvertedIndex(
-        spark, out_dir, seg.n_docs, seg.avgdl, cfg,
-        total_dl=seg.total_dl, max_doc_id=seg.max_doc_id, codec=cfg.codec,
+    return _commit_index(
+        spark, out_dir, cfg, seg.n_docs, seg.total_dl, seg.avgdl, seg.max_doc_id
     )
 
 
@@ -925,15 +948,11 @@ def add_indexes(
     resumed build pays); docmeta/docmap unions are scan+write with no
     shuffle. stats.json commits LAST (os.replace) so a crash mid-merge
     never leaves a dir that loads as a complete index."""
-    import functools
-
-    import pyarrow.parquet as pq
-
     with write_lock(out_dir):
-        return _add_indexes_locked(spark, index_dirs, cfg, out_dir, functools, pq)
+        return _add_indexes_locked(spark, index_dirs, cfg, out_dir)
 
 
-def _add_indexes_locked(spark, index_dirs, cfg, out_dir, functools, pq):
+def _add_indexes_locked(spark, index_dirs, cfg, out_dir):
     if len(index_dirs) < 2:
         raise ValueError("add_indexes needs at least two source indexes")
     idxs = [InvertedIndex.load(spark, d, cfg) for d in index_dirs]
@@ -957,36 +976,16 @@ def _add_indexes_locked(spark, index_dirs, cfg, out_dir, functools, pq):
         )
 
     os.makedirs(out_dir, exist_ok=True)
-
-    # stage 1 analog: one merged flat run, manifest-recorded (compact()
-    # convention — the run is re-bucketed by the OUT config's partition
-    # count so a later resume/compaction sees a coherent layout)
-    run_name = "run-merge"
-    flat_path = os.path.join(out_dir, "flat", run_name)
-    union_flat = functools.reduce(
-        DataFrame.unionByName, [ix.flat.select(*FLAT_COLS) for ix in idxs]
-    ).withColumn(
-        "build_part",
-        F.pmod(F.xxhash64("doc_id"), F.lit(cfg.build_partitions)).cast("int"),
+    flat = _write_flat_run(
+        spark,
+        functools.reduce(
+            DataFrame.unionByName, [ix.flat.select(*FLAT_COLS) for ix in idxs]
+        ),
+        cfg, out_dir, "run-merge",
     )
-    union_flat.write.mode("overwrite").parquet(flat_path)
-    _write_manifest(
-        out_dir,
-        {
-            "completed_parts": list(range(cfg.build_partitions)),
-            "part_lineage": {
-                str(i): {"run_dir": run_name} for i in range(cfg.build_partitions)
-            },
-            "n_parts": cfg.build_partitions,
-            "finalized": True,
-        },
-    )
-    flat = spark.read.parquet(flat_path).select(*FLAT_COLS).persist()
 
     # docmap + docmeta unions (per-doc rows are already final)
-    functools.reduce(DataFrame.unionByName, [ix.docmap for ix in idxs]).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(out_dir, "docmap.parquet"))
+    union_map.write.mode("overwrite").parquet(os.path.join(out_dir, "docmap.parquet"))
     functools.reduce(
         DataFrame.unionByName,
         [
@@ -998,51 +997,11 @@ def _add_indexes_locked(spark, index_dirs, cfg, out_dir, functools, pq):
     ).write.mode("overwrite").parquet(os.path.join(out_dir, "docmeta.parquet"))
 
     # exact merged stats — identical floats to a full rebuild
-    n_docs = n_sum
     total_dl = sum(ix.total_dl for ix in idxs)
-    avgdl = (total_dl / n_docs) if n_docs else 0.0
+    avgdl = (total_dl / n_sum) if n_sum else 0.0
     max_doc_id = max(ix.max_doc_id for ix in idxs)
-
-    # stage 3: lexicon (same expression as the batch build)
-    lexicon_path = os.path.join(out_dir, "lexicon.parquet")
-    lex = flat.groupBy("term").agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
-    lex = lex.withColumn(
-        "idf",
-        F.log(
-            F.lit(1.0)
-            + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
-            / (F.col("df") + F.lit(0.5))
-        ),
-    )
-    lex.write.mode("overwrite").parquet(lexicon_path)
-
-    # stage 4: postings (identical hot/cold policy as the batch build)
-    hot_tbl = pq.read_table(
-        lexicon_path, columns=["term"], filters=[("df", ">=", cfg.hot_term_df)]
-    )
-    blocks = encode_postings(
-        flat, cfg, avgdl, max_doc_id, hot_tbl.column("term").to_pylist()
-    )
-    blocks.write.mode("overwrite").parquet(os.path.join(out_dir, "postings.parquet"))
-    flat.unpersist()
-
-    tmp = os.path.join(out_dir, "stats.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "n_docs": n_docs,
-                "total_dl": total_dl,
-                "avgdl": avgdl,
-                "max_doc_id": max_doc_id,
-                "codec": cfg.codec,
-            },
-            f,
-        )
-    os.replace(tmp, os.path.join(out_dir, "stats.json"))
-    return InvertedIndex(
-        spark, out_dir, n_docs, avgdl, cfg,
-        total_dl=total_dl, max_doc_id=max_doc_id, codec=cfg.codec,
-    )
+    _write_lexicon_postings(flat, cfg, out_dir, n_sum, avgdl, max_doc_id)
+    return _commit_index(spark, out_dir, cfg, n_sum, total_dl, avgdl, max_doc_id)
 
 
 def delete_docs_by_query(
@@ -1065,20 +1024,18 @@ def delete_docs_by_query(
     countDistinct(term) == n filter, then the tombstone parquet is
     written straight from the distributed id set
     (:func:`_delete_ids_df`): a delete matching a billion docs never
-    collects ids to the driver. The kill map that queries broadcast
+    collects ids to the driver. The kill map that queries ship
     afterwards DOES grow with the match count — the
-    ``MAX_KILL_PAIRS`` bound + ``maybe_compact`` policy apply, so a
+    ``MAX_KILL_PAIRS`` bound + ``maybe_compact`` policy apply (to the
+    match resolution too: it decodes through the query path), so a
     corpus-scale delete should be followed by ``compact()``."""
     from org_rdkit_lucene_spark.functions.tokenizer import tokenize_text
     from org_rdkit_lucene_spark.operators.query import decoded_postings
 
-    existing = list_segments(base_index_dir)
-    ords = [seg_ordinal(d) for d in existing]
-    max_ord = max(ords) if ords else -1.0
-    prior = _prior_view(spark, base_index_dir, max_ord + 1.0, cfg)
+    prior = SegmentedIndex.load(spark, base_index_dir, cfg)
     words = sorted(set(tokenize_text(query_text, cfg.tokenizer)))
     if not words:
-        ids = _empty(spark, "doc_id long")
+        ids = spark.createDataFrame([], "doc_id long")
     else:
         ids = (
             decoded_postings(prior, words)
@@ -1106,10 +1063,7 @@ def delete_docs_by_key(
     :func:`delete_docs` (midpoint-ordinal safety law included).
     Unknown keys resolve to nothing — deletes are idempotent. Returns
     the segment dir."""
-    existing = list_segments(base_index_dir)
-    ords = [seg_ordinal(d) for d in existing]
-    max_ord = max(ords) if ords else -1.0
-    prior = _prior_view(spark, base_index_dir, max_ord + 1.0, cfg)
+    prior = SegmentedIndex.load(spark, base_index_dir, cfg)
     kdf = F.broadcast(
         spark.createDataFrame(
             [(str(r), str(p), str(c)) for r, p, c in keys],

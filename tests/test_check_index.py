@@ -114,6 +114,30 @@ def test_check_segmented_green_and_detects_tamper(spark, tmp_path):
     assert not bad.loc["merged:doc_count", "passed"]
 
 
+def test_check_segmented_tombstone_only_segment(spark, tmp_path):
+    """A pure delete's segment holds only tombstones and stats: the
+    checker gives it the tombstone-count check alone and the merged
+    view stays green."""
+    from org_rdkit_lucene_spark.operators.check import check_segmented
+    from org_rdkit_lucene_spark.streaming.incremental import (
+        SegmentedIndex,
+        delete_docs,
+    )
+
+    pdf = make_corpus_pdf(n_docs=60, seed=19)
+    pdf.insert(0, "ext_id", range(len(pdf)))
+    cfg = IndexConfig(build_partitions=2, hot_term_df=60, n_salts=2)
+    base_dir = str(tmp_path / "base")
+    build_index(spark, spark.createDataFrame(pdf), cfg, base_dir, id_col="ext_id")
+    seg_dir = delete_docs(spark, base_dir, [4, 9, 30], cfg)
+    out = check_segmented(SegmentedIndex.load(spark, base_dir, cfg))
+    failed = out[~out.passed]
+    assert failed.empty, failed.to_string()
+    seg_rows = [c for c in out.check if c.startswith("seg0:")]
+    assert seg_rows == [f"seg0:{os.path.basename(seg_dir)}:tombstone_count"]
+    assert {"merged:doc_count", "merged:tombstones_reachable"} <= set(out.check)
+
+
 def test_positions_checks_pass_and_detect_tamper(spark, tmp_path):
     """CheckIndex's .prx cross-check analog: a fresh positions artifact
     passes pair/coverage/ascending invariants; a corrupted artifact

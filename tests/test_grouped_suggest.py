@@ -296,3 +296,46 @@ def test_block_join_search_after_pages_exactly(gs_index):
         full.reset_index(drop=True).astype({"score_q": "int64"}),
         check_dtype=False,
     )
+
+
+def test_block_join_paging_with_null_parents(spark, tmp_path):
+    """Parents whose key is NULL rank last on score ties (NULLS LAST)
+    and still page exactly: page1 + page2 == top-2k at every k,
+    including a cursor that sits on the NULL parent."""
+    from org_rdkit_lucene_spark.operators.query import search_block_join
+
+    langs = [None, "java", None, "go", "rust", "java", "go", "python"]
+    corpus = spark.createDataFrame(
+        DOCS.assign(lang=langs),
+        "doc_id long, text string, source string, lang string",
+    ).select(
+        F.col("source").alias("repo"),
+        F.concat_ws("/", "source", F.lit("doc"), "doc_id").alias("path"),
+        F.col("doc_id").cast("string").alias("commit"),
+        "lang",
+        F.col("text").alias("content"),
+        F.col("doc_id").alias("ext_id"),
+    )
+    idx = build_index(
+        spark, corpus, IndexConfig(build_partitions=2, hot_term_df=50, n_salts=2),
+        str(tmp_path / "nullidx"), id_col="ext_id",
+    )
+    q = "merge tree"
+    full = search_block_join(idx, [(1, q, 6)], "lang", "count").toPandas()
+    assert full["parent"].isna().any()
+    for k in (1, 2, 3):
+        page1 = search_block_join(idx, [(1, q, k)], "lang", "count").toPandas()
+        last = page1.iloc[-1]
+        parent = None if pd.isna(last.parent) else str(last.parent)
+        page2 = search_block_join(
+            idx, [(1, q, k)], "lang", "count",
+            after={1: (int(last.score_q), parent)},
+        ).toPandas()
+        paged = pd.concat([page1, page2], ignore_index=True)
+        paged["rank"] = range(1, len(paged) + 1)
+        want = full.head(2 * k).reset_index(drop=True)
+        pd.testing.assert_frame_equal(
+            paged.astype({"score_q": "int64"}),
+            want.astype({"score_q": "int64"}),
+            check_dtype=False,
+        )

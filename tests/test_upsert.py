@@ -21,6 +21,7 @@ from org_rdkit_lucene_spark.streaming.incremental import (
     build_segment,
     compact,
     delete_docs,
+    list_segments,
     segments_root,
 )
 
@@ -142,6 +143,67 @@ def test_updated_doc_found_under_new_content_only(upsert_setup):
     expect = (set(UPDATED_IDS) | set(NEW_IDS)) - set(DELETED_IDS)
     assert set(res["doc_id"]) == expect
     assert res["doc_id"].is_unique
+
+
+def test_dead_versions_law():
+    """The one kill law both decode kernels share, against a per-posting
+    loop: a tombstone from ordinal j kills versions with ordinal < j."""
+    import numpy as np
+
+    from org_rdkit_lucene_spark.operators.query import dead_versions
+
+    rng = np.random.default_rng(5)
+    kill_ids = np.unique(rng.integers(0, 60, 25))
+    kill = (kill_ids, rng.integers(1, 4, len(kill_ids)))
+    docs = rng.integers(0, 70, 400)
+    ords = rng.integers(0, 4, 400)
+    ko = dict(zip(kill[0].tolist(), kill[1].tolist()))
+    want = [d in ko and o < ko[d] for d, o in zip(docs.tolist(), ords.tolist())]
+    assert dead_versions(kill, docs, ords).tolist() == want
+    empty = (np.empty(0, np.int64), np.empty(0, np.int64))
+    assert not dead_versions(empty, docs, ords).any()
+
+
+def _table_sources(df, base_dir: str) -> set[tuple[str, ...]]:
+    """(owner, table) of every file a DataFrame scans: owner is "base"
+    or a segment dir name."""
+    out = set()
+    for f in df.inputFiles():
+        rel = os.path.relpath(f.removeprefix("file:"), base_dir).split(os.sep)
+        out.add(tuple(rel[1:3]) if rel[0] == "segments" else ("base", rel[0]))
+    return out
+
+
+def test_pure_delete_segment_is_tombstone_only(upsert_setup):
+    """A pure delete writes only its tombstones and stats; the merged
+    tables scan the base plus the add-carrying segments and nothing of
+    the delete segment; the view reads deletes.parquet once, so a second
+    query runs with the tombstone files gone."""
+    spark, cfg, base_dir = (
+        upsert_setup["spark"], upsert_setup["cfg"], upsert_setup["base_dir"]
+    )
+    add_seg, del_seg = list_segments(base_dir)
+    assert sorted(os.listdir(del_seg)) == ["deletes.parquet", "stats.json"]
+
+    view = SegmentedIndex.load(spark, base_dir, cfg)
+    add_name, del_name = os.path.basename(add_seg), os.path.basename(del_seg)
+    for table in ("postings", "docmeta", "lexicon"):
+        src = _table_sources(getattr(view, table), base_dir)
+        assert {o for o, t in src if t == f"{table}.parquet"} == {"base", add_name}
+        assert all(o != del_name for o, _ in src)
+
+    first = _sorted(search(view, QUERIES, mode="disjunctive"))
+    moved = []
+    try:
+        for d in (add_seg, del_seg):
+            src = os.path.join(d, "deletes.parquet")
+            os.rename(src, src + ".away")
+            moved.append(src)
+        second = _sorted(search(view, QUERIES, mode="disjunctive"))
+    finally:
+        for src in moved:
+            os.rename(src + ".away", src)
+    pd.testing.assert_frame_equal(first, second)
 
 
 def test_segment_replay_idempotent(upsert_setup):
@@ -566,8 +628,9 @@ def test_segment_without_positions_raises(spark, tmp_path_factory):
 
 def test_kill_pairs_budget_enforced(spark, tmp_path_factory, monkeypatch):
     """The driver-side kill map is STRUCTURALLY bounded: past
-    MAX_KILL_PAIRS tombstones kill_pairs() raises with a compact()
-    directive instead of materializing an OOM-sized map, and past the
+    MAX_KILL_PAIRS tombstones kill_pairs() — and with it search and
+    search_wand — raises with a compact() directive instead of shipping
+    an OOM-sized map, while compact() itself still runs; past the
     default policy fraction it warns."""
     import org_rdkit_lucene_spark.streaming.incremental as inc
 
@@ -590,6 +653,16 @@ def test_kill_pairs_budget_enforced(spark, tmp_path_factory, monkeypatch):
     seg2 = SegmentedIndex.load(spark, base_dir, cfg)
     with pytest.raises(RuntimeError, match="kill-map budget"):
         seg2.kill_pairs()
+    # both query paths read the same bounded kill pairs
+    qs = [(1, "budget probe", 5)]
+    with pytest.raises(RuntimeError, match="kill-map budget"):
+        search_wand(seg2, qs)
+    with pytest.raises(RuntimeError, match="kill-map budget"):
+        search(seg2, qs)
+    # compaction is the remedy, so it reads the kill map without the bound
+    comp = compact(spark, base_dir, cfg, str(tmp / "compacted"))
+    assert comp.n_docs == len(pdf)
+    assert len(search(comp, qs).toPandas()) == 5
 
 
 def test_delete_by_query(spark, tmp_path_factory):
