@@ -613,8 +613,11 @@ def token_budget_mix(
     table is driver-sized and broadcast. No self-joins, no collects."""
     from pyspark.sql import Window
 
+    from org_rdkit_lucene_spark.operators.build import driver_df
+
     spark = docs.sparkSession
-    budgets = spark.createDataFrame(
+    budgets = driver_df(
+        spark,
         [(s, int(budget_tokens * w)) for s, w in sorted(weights.items())],
         "stratum string, budget long",
     )

@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from org_rdkit_lucene_spark.operators.build import driver_df
+
 QUANT = 1_000_000
 
 
@@ -153,7 +155,7 @@ def lsh_cosine_topk(
         signs = (np.asarray(v, dtype=np.float64) @ planes) > 0
         bucket = int((signs.astype(np.uint64) << np.arange(n_planes, dtype=np.uint64)).sum())
         qrows.extend((qid, bucket ^ m) for m in masks)
-    qb = F.broadcast(spark.createDataFrame(qrows, "query_id long, bucket long"))
+    qb = F.broadcast(driver_df(spark, qrows, "query_id long, bucket long"))
     buckets = lsh_bucket_ids(emb, dim, n_planes, seed, id_col, vec_col)
     cand_ids = buckets.join(qb, "bucket").select(
         "query_id", F.col("vec_id").alias("cid")
@@ -252,7 +254,7 @@ def ivf_cosine_topk(
         cos_q = np.floor(cmat @ qn * QUANT + 0.5).astype(np.int64)
         order = np.lexsort((np.arange(len(cos_q)), -cos_q))[:nprobe]
         probe_rows.extend((int(qid), int(c)) for c in order)
-    pb = F.broadcast(spark.createDataFrame(probe_rows, "query_id long, cid long"))
+    pb = F.broadcast(driver_df(spark, probe_rows, "query_id long, cid long"))
 
     cand_ids = asg.join(pb, "cid").select("query_id", F.col("vec_id").alias("cid2"))
     vecs = emb.select(F.col(id_col).alias("cid2"), vec_col)
@@ -579,7 +581,7 @@ def _pq_search(emb, codes, books, bounds, query_vecs, k, n_candidates, id_col, v
                 (int(qid), j, int(c), int(s)) for c, s in enumerate(simq)
             )
     tb = F.broadcast(
-        spark.createDataFrame(tables, "query_id long, sub int, cid long, simq long")
+        driver_df(spark, tables, "query_id long, sub int, cid long, simq long")
     )
     approx = (
         codes.join(tb, ["sub", "cid"])

@@ -35,6 +35,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from org_rdkit_lucene_spark.config import IndexConfig
 from org_rdkit_lucene_spark.functions.codecs import delta_encode, encode_ints
@@ -50,6 +51,57 @@ POSTINGS_SCHEMA = (
     "doc_bytes binary, tf_bytes binary, dl_bytes binary, max_tf_norm double, "
     "max_tf int, min_dl int"
 )
+# Every index table's schema as its writers produce it. Readers declare
+# it (read_table): a bare ``spark.read.parquet`` starts one
+# schema-inference Spark job per call. tests/test_declared_schemas.py
+# checks the writers against this dict. positions.parquet is absent on
+# purpose: legacy flat artifacts (pos, not poss) still need inference
+# (positions._as_packed).
+TABLE_SCHEMAS = {
+    "docmap": "repo string, path string, commit string, doc_id long",
+    "docmeta": (
+        "doc_id long, repo string, path string, commit string, lang string, "
+        "sha256 string, doc_len int"
+    ),
+    "lexicon": "term string, df long, cf long, idf double",
+    "postings": POSTINGS_SCHEMA,
+    "flat": FLAT_SCHEMA,
+    "metrics": "stage string, detail int, seconds double",
+    # segment-only tables: a segment lexicon has no idf (the view
+    # derives it under the merged N); deletes are its tombstones
+    "segment_lexicon": "term string, df long, cf long",
+    "deletes": "doc_id long",
+}
+LEXICON_COLS = ("term", "df", "cf", "idf")
+
+
+def read_table(spark: SparkSession, path: str, table: str) -> DataFrame:
+    """Read an index table under its declared schema — no inference job."""
+    return spark.read.schema(TABLE_SCHEMAS[table]).parquet(path)
+
+
+def empty_df(spark: SparkSession, schema: str) -> DataFrame:
+    """An empty table of ``schema`` from a JVM-side ``range(0)``. An
+    empty list or pandas frame would become a Python RDD, whose tasks
+    each pay a Python worker's start-up cost (CLAUDE.md, fixed costs)."""
+    fields = StructType.fromDDL(schema).fields
+    return spark.range(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in fields]
+    )
+
+
+def driver_df(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A driver-built table (tuples, or a pandas frame with ``schema``'s
+    columns) as a LocalTableScan: non-empty pandas goes through Arrow
+    into a local relation, so neither building nor scanning it starts a
+    Python task. Empty input is :func:`empty_df`."""
+    if len(rows) == 0:
+        return empty_df(spark, schema)
+    st = StructType.fromDDL(schema)
+    if not isinstance(rows, pd.DataFrame):
+        rows = pd.DataFrame(list(rows), columns=st.names)
+    return spark.createDataFrame(rows, st)
+
 
 # ---------------------------------------------------------------------------
 # stage 0 — deterministic doc ids
@@ -308,13 +360,12 @@ def read_flat(spark: SparkSession, index_dir: str, manifest: dict | None = None)
     """Read the flat (doc_id, term, tf, dl) table from exactly the
     manifest-recorded run dirs (see :func:`flat_run_dirs`)."""
     dirs = flat_run_dirs(index_dir, manifest)
+    reader = spark.read.schema(FLAT_SCHEMA)
     if not dirs:  # legacy manifest without run_dir lineage
-        return (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(os.path.join(index_dir, "flat"))
-            .select("doc_id", "term", "tf", "dl")
+        return reader.option("recursiveFileLookup", "true").parquet(
+            os.path.join(index_dir, "flat")
         )
-    return spark.read.parquet(*dirs).select("doc_id", "term", "tf", "dl")
+    return reader.parquet(*dirs)
 
 
 def build_flat_runs(
@@ -405,7 +456,8 @@ def build_flat_runs(
     # build_part from the just-written run — a metadata-scale agg
     part_rows = {
         int(r["build_part"]): (int(r["rows"]), int(r["docs"]))
-        for r in corpus_ids.sparkSession.read.parquet(run_dir)
+        for r in corpus_ids.sparkSession.read.schema(run_schema)
+        .parquet(run_dir)
         .groupBy("build_part")
         .agg(F.count("*").alias("rows"), F.countDistinct("doc_id").alias("docs"))
         .collect()
@@ -472,87 +524,22 @@ def _encode_term_arrays(
     return rows
 
 
-def _make_cold_encoder(cfg: IndexConfig, avgdl: float):
-    """mapInPandas encoder over a term-partitioned, (term, doc_id)-sorted
-    stream. Carries incomplete trailing terms across Arrow batches so a
-    term spanning batches is encoded exactly once from its full list."""
-    bs, k1, b, codec = cfg.block_size, cfg.bm25.k1, cfg.bm25.b, cfg.codec
-    cols = ["term", "block_id", "first_doc", "last_doc", "n",
-            "doc_bytes", "tf_bytes", "dl_bytes", "max_tf_norm", "max_tf", "min_dl"]
-
-    def encode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-
-        def encode_terms(pdf: pd.DataFrame) -> pd.DataFrame:
-            out_rows: list[tuple] = []
-            terms = pdf["term"].to_numpy()
-            docs = pdf["doc_id"].to_numpy(np.int64)
-            tfs = pdf["tf"].to_numpy(np.float64)
-            dls = pdf["dl"].to_numpy(np.float64)
-            boundaries = np.flatnonzero(terms[1:] != terms[:-1]) + 1
-            starts = np.concatenate(([0], boundaries))
-            ends = np.concatenate((boundaries, [len(terms)]))
-            for s, e in zip(starts, ends):
-                out_rows.extend(
-                    _encode_term_arrays(terms[s], docs[s:e], tfs[s:e], dls[s:e], bs, k1, b, avgdl, codec)
-                )
-            return pd.DataFrame(out_rows, columns=cols)
-
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            last_term = pdf["term"].iloc[-1]
-            head = pdf[pdf["term"] != last_term]
-            carry = pdf[pdf["term"] == last_term]
-            if len(head):
-                yield encode_terms(head)
-        if carry is not None and len(carry):
-            yield encode_terms(carry)
-
-    return encode
-
-
-_POSTINGS_ARROW_TYPES = None
-
-
-def _postings_arrow_schema():
-    global _POSTINGS_ARROW_TYPES
-    if _POSTINGS_ARROW_TYPES is None:
-        import pyarrow as pa
-
-        _POSTINGS_ARROW_TYPES = pa.schema(
-            [
-                ("term", pa.string()),
-                ("block_id", pa.int32()),
-                ("first_doc", pa.int64()),
-                ("last_doc", pa.int64()),
-                ("n", pa.int32()),
-                ("doc_bytes", pa.binary()),
-                ("tf_bytes", pa.binary()),
-                ("dl_bytes", pa.binary()),
-                ("max_tf_norm", pa.float64()),
-                ("max_tf", pa.int32()),
-                ("min_dl", pa.int32()),
-            ]
-        )
-    return _POSTINGS_ARROW_TYPES
-
-
 def _make_cold_encoder_arrow(cfg: IndexConfig, avgdl: float):
-    """mapInArrow twin of :func:`_make_cold_encoder`: consumes the
-    term-partitioned, (term, doc_id)-sorted stream as raw Arrow batches
-    — the term column never becomes Python objects (term boundaries are
-    found on dictionary codes; one string materializes per term, not
-    per row). Carries the trailing term across batches exactly like the
-    pandas version. Output blocks are byte-identical (tested)."""
+    """mapInArrow encoder over a term-partitioned, (term, doc_id)-sorted
+    stream, consumed as raw Arrow batches — the term column never
+    becomes Python objects (term boundaries are found on dictionary
+    codes; one string materializes per term, not per row). Carries the
+    trailing term across batches so a term spanning batches is encoded
+    exactly once from its full list."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     bs, k1, b, codec = cfg.block_size, cfg.bm25.k1, cfg.bm25.b, cfg.codec
+    # resolved on the driver: DDL parsing needs the JVM
+    schema = to_arrow_schema(StructType.fromDDL(POSTINGS_SCHEMA))
 
     def _rows_to_rb(rows: list[tuple]):
         import pyarrow as pa
 
-        schema = _postings_arrow_schema()
         cols = list(zip(*rows))
         return pa.record_batch(
             [pa.array(list(c), type=f.type) for c, f in zip(cols, schema)], schema=schema
@@ -630,8 +617,7 @@ def _make_hot_encoder(cfg: IndexConfig, avgdl: float):
     salt order (salts are doc_id ranges ⇒ concatenation is globally
     sorted) and block-encode — byte-identical to an unsalted build."""
     bs, k1, b, codec = cfg.block_size, cfg.bm25.k1, cfg.bm25.b, cfg.codec
-    cols = ["term", "block_id", "first_doc", "last_doc", "n",
-            "doc_bytes", "tf_bytes", "dl_bytes", "max_tf_norm", "max_tf", "min_dl"]
+    cols = StructType.fromDDL(POSTINGS_SCHEMA).names
 
     def merge_runs(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("salt")
@@ -642,6 +628,39 @@ def _make_hot_encoder(cfg: IndexConfig, avgdl: float):
         return pd.DataFrame(rows, columns=cols)
 
     return merge_runs
+
+
+# Sorted by term, a lexicon row group covers one term range: a one-term
+# slice of a 10^7-term lexicon (81 groups) reads 22 ms, not 290 ms.
+LEXICON_ROW_GROUP_BYTES = 2 << 20
+
+
+def write_lexicon(flat: DataFrame, n_docs: int, path: str) -> None:
+    """Stage 3: per-term df/cf from the flat rows, idf under ``n_docs``
+    (:func:`idf_col`), written sorted by term in small row groups — the
+    layout :meth:`InvertedIndex.lexicon_slice` prunes on (Lucene's
+    sorted terms dictionary)."""
+    lex = flat.groupBy("term").agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
+    lex.withColumn("idf", idf_col(n_docs)).orderBy("term").write.option(
+        "parquet.block.size", LEXICON_ROW_GROUP_BYTES
+    ).mode("overwrite").parquet(path)
+
+
+def read_hot_terms(lexicon_path: str, cfg: IndexConfig) -> list[str]:
+    """Terms with df ≥ ``cfg.hot_term_df``, read with pyarrow on the
+    driver (the hot set is tiny by construction; no Spark job)."""
+    import pyarrow.parquet as pq
+
+    return pq.read_table(
+        lexicon_path, columns=["term"], filters=[("df", ">=", cfg.hot_term_df)]
+    ).column("term").to_pylist()
+
+
+def idf_col(n_docs: int):
+    """BM25 idf of the ``df`` column over ``n_docs`` docs — the one idf
+    law every lexicon (build, fold, segmented view) is written with."""
+    df = F.col("df")
+    return F.log(F.lit(1.0) + (F.lit(float(n_docs)) - df + F.lit(0.5)) / (df + F.lit(0.5)))
 
 
 def encode_postings(
@@ -655,15 +674,15 @@ def encode_postings(
     term-shuffle + mapInArrow encode; hot terms via the salted two-pass
     (doc_id-range salts concatenate in order ⇒ byte-identical to an
     unsalted build). Used by the batch build and by compaction."""
-    spark = flat.sparkSession
     p = cfg.build_partitions
+    hot_df = None
     if hot_terms and len(hot_terms) > cfg.hot_broadcast_threshold:
         # past the literal-list threshold an `isin` would inline
         # thousands of literals into the plan (bloating analysis and
         # losing nothing by switching): broadcast-join the hot-term set
         # instead — same rows, plan stays O(1) in hot-set size.
         hot_df = F.broadcast(
-            spark.createDataFrame([(t,) for t in hot_terms], "term string")
+            driver_df(flat.sparkSession, [(t,) for t in hot_terms], "term string")
         )
         cold = flat.join(hot_df, "term", "left_anti")
     elif hot_terms:
@@ -679,12 +698,8 @@ def encode_postings(
         return cold_blocks
     # salt = doc_id range bucket → per-salt runs concatenate in order
     bucket = max(1, math.ceil((max_doc_id + 1) / cfg.n_salts))
-    if len(hot_terms) > cfg.hot_broadcast_threshold:
-        hot_src = flat.join(
-            F.broadcast(spark.createDataFrame([(t,) for t in hot_terms], "term string")),
-            "term",
-            "left_semi",
-        )
+    if hot_df is not None:
+        hot_src = flat.join(hot_df, "term", "left_semi")
     else:
         hot_src = flat.filter(F.col("term").isin(hot_terms))
     hot = hot_src.withColumn("salt", (F.col("doc_id") / F.lit(bucket)).cast("int"))
@@ -713,25 +728,62 @@ class InvertedIndex:
     max_doc_id: int = -1
     codec: str = "varbyte"
 
+    def _table(self, table: str) -> DataFrame:
+        return read_table(
+            self.spark, os.path.join(self.index_dir, f"{table}.parquet"), table
+        )
+
     @property
     def docmap(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.index_dir, "docmap.parquet"))
+        return self._table("docmap")
 
     @property
     def docmeta(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.index_dir, "docmeta.parquet"))
+        return self._table("docmeta")
 
     @property
     def lexicon(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.index_dir, "lexicon.parquet"))
+        return self._table("lexicon")
 
     @property
     def postings(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.index_dir, "postings.parquet"))
+        return self._table("postings")
 
     @property
     def metrics(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.index_dir, "metrics.parquet"))
+        return self._table("metrics")
+
+    def lexicon_slice(self, terms, cols=LEXICON_COLS) -> pd.DataFrame:
+        """The lexicon rows of ``terms`` (``cols`` only), read on the
+        driver with pyarrow: no Spark job, and the stored idf bytes as
+        written. Only the row groups whose [min, max] term range holds
+        a wanted term are read (pyarrow does not prune on ``isin``), so
+        on a :func:`write_lexicon` layout the work grows with the
+        query's terms, not with the vocabulary."""
+        import bisect
+
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        wanted = sorted(set(terms))
+
+        def holds_wanted(st):  # a group without statistics is read
+            return not st or bisect.bisect_right(
+                wanted, st["max"]
+            ) > bisect.bisect_left(wanted, st["min"])
+
+        lex = ds.dataset(os.path.join(self.index_dir, "lexicon.parquet"))
+        groups = [
+            frag.subset(row_group_ids=[g.id])
+            for frag in lex.get_fragments() for g in frag.row_groups
+            if holds_wanted(g.statistics.get("term"))
+        ]
+        return ds.FileSystemDataset(
+            groups, lex.schema, lex.format, lex.filesystem
+        ).to_table(
+            columns=list(cols),
+            filter=ds.field("term").isin(pa.array(wanted, pa.string())),
+        ).to_pandas()
 
     @property
     def has_positions(self) -> bool:
@@ -870,7 +922,7 @@ def _build_index_locked(
             docmap_df = assign_doc_ids(corpus, cfg.build_partitions)
         docmap_df.write.mode("overwrite").parquet(docmap_path)
         metrics_rows.append(("docmap", -1, time.time() - t0))
-    docmap = spark.read.parquet(docmap_path)
+    docmap = read_table(spark, docmap_path, "docmap")
     # consumed by both stage 1 (flat runs) and stage 2 (docmeta): persist
     # so the id attachment runs once. With a data-supplied id column the
     # id IS the row — no join needed (shuffling the full content column
@@ -1014,33 +1066,14 @@ def _build_index_locked(
     lexicon_path = os.path.join(index_dir, "lexicon.parquet")
     if not os.path.exists(os.path.join(lexicon_path, "_SUCCESS")):
         t0 = time.time()
-        lex = flat.groupBy("term").agg(
-            F.count("*").alias("df"), F.sum("tf").alias("cf")
-        )
-        lex = lex.withColumn(
-            "idf",
-            F.log(
-                F.lit(1.0)
-                + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-            ),
-        )
-        lex.write.mode("overwrite").parquet(lexicon_path)
+        write_lexicon(flat, n_docs, lexicon_path)
         metrics_rows.append(("lexicon", -1, time.time() - t0))
 
     # -- stage 4: postings (cold: one shuffle; hot: salted two-pass)
     postings_path = os.path.join(index_dir, "postings.parquet")
     if not os.path.exists(os.path.join(postings_path, "_SUCCESS")):
         t0 = time.time()
-        # hot-term discovery straight from the lexicon parquet with
-        # predicate pushdown — the hot set is tiny by construction and
-        # was being materialized on the driver either way; pyarrow skips
-        # the extra Spark job and its scheduling latency
-        import pyarrow.parquet as pq
-
-        hot_tbl = pq.read_table(
-            lexicon_path, columns=["term"], filters=[("df", ">=", cfg.hot_term_df)]
-        )
-        hot_terms = hot_tbl.column("term").to_pylist()
+        hot_terms = read_hot_terms(lexicon_path, cfg)
         blocks = encode_postings(flat, cfg, avgdl, max_doc_id, hot_terms)
         blocks.write.mode("overwrite").parquet(postings_path)
         metrics_rows.append(("postings", len(hot_terms), time.time() - t0))

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from org_rdkit_lucene_spark.functions.codecs import decode_ints_many
+from org_rdkit_lucene_spark.operators.build import read_table
 
 
 def _deep_kernel(codec: str):
@@ -311,12 +312,12 @@ def check_segmented(seg, deep: bool = False) -> pd.DataFrame:
             st = _json.load(f)
         dl_ids = _os.path.join(d, "deletes.parquet")
         if _os.path.isdir(dl_ids):
-            ndel = spark.read.parquet(dl_ids).count()
+            ndel = read_table(spark, dl_ids, "deletes").count()
             add(f"{tag}:tombstone_count", ndel == st.get("del_n_docs", 0),
                 f"file={ndel} stats={st.get('del_n_docs', 0)}")
         if st["n_docs"] == 0:
             continue  # tombstone-only segment: no add-side tables
-        dm = spark.read.parquet(_os.path.join(d, "docmeta.parquet"))
+        dm = read_table(spark, _os.path.join(d, "docmeta.parquet"), "docmeta")
         drow = dm.agg(
             F.count("*").alias("n"),
             F.countDistinct("doc_id").alias("nd"),
@@ -327,8 +328,10 @@ def check_segmented(seg, deep: bool = False) -> pd.DataFrame:
             f"stats={st['n_docs']} docmeta={drow['n']} distinct={drow['nd']}")
         add(f"{tag}:total_dl", int(drow["dl"] or 0) == st["total_dl"],
             f"sum={drow['dl']} stats={st['total_dl']}")
-        flat = spark.read.parquet(_os.path.join(d, "flat.parquet"))
-        lex = spark.read.parquet(_os.path.join(d, "lexicon.parquet"))
+        flat = read_table(spark, _os.path.join(d, "flat.parquet"), "flat")
+        lex = read_table(
+            spark, _os.path.join(d, "lexicon.parquet"), "segment_lexicon"
+        )
         bad_lex = (
             flat.groupBy("term")
             .agg(F.count("*").alias("fdf"), F.sum("tf").alias("fcf"))
@@ -339,7 +342,7 @@ def check_segmented(seg, deep: bool = False) -> pd.DataFrame:
             ).count()
         )
         add(f"{tag}:lexicon_matches_flat", bad_lex == 0, f"bad_terms={bad_lex}")
-        post = spark.read.parquet(_os.path.join(d, "postings.parquet"))
+        post = read_table(spark, _os.path.join(d, "postings.parquet"), "postings")
         bad_blocks = (
             post.groupBy("term").agg(F.sum("n").alias("bn"))
             .join(lex.select("term", "df"), "term", "full")

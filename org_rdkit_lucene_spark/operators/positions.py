@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from org_rdkit_lucene_spark.functions.tokenizer import tokenize_text
+from org_rdkit_lucene_spark.operators.build import driver_df, empty_df
 
 POSITIONS_NAME = "positions.parquet"
 
@@ -399,12 +400,10 @@ def search_phrase_positions(
         meta_rows.append((int(qid), len(words), int(k)))
         word_rows.extend((int(qid), w, i) for i, w in enumerate(words))
     if not meta_rows:
-        return spark.createDataFrame(
-            [], "query_id int, rank int, doc_id long, n_occ long"
-        )
+        return empty_df(spark, "query_id int, rank int, doc_id long, n_occ long")
     meta = F.broadcast(
-        spark.createDataFrame(
-            [(q, k) for q, _n, k in meta_rows], "query_id int, k int"
+        driver_df(
+            spark, [(q, k) for q, _n, k in meta_rows], "query_id int, k int"
         )
     )
     occ = _phrase_occurrences(positions, word_rows).withColumnRenamed(
@@ -493,7 +492,7 @@ def _phrase_occurrences(
     parts: list[DataFrame] = []
     if single_rows:
         st = F.broadcast(
-            spark.createDataFrame(single_rows, "group_id int, term string")
+            driver_df(spark, single_rows, "group_id int, term string")
         )
         parts.append(
             packed.filter(F.col("term").isin(sorted({w for _, w in single_rows})))
@@ -504,7 +503,7 @@ def _phrase_occurrences(
         )
     if pre_words:
         pt = F.broadcast(
-            spark.createDataFrame(pre_groups, "group_id int, term string")
+            driver_df(spark, pre_groups, "group_id int, term string")
         )
         pre = F.broadcast(
             packed.filter(
@@ -517,7 +516,7 @@ def _phrase_occurrences(
     if plain_words:
         parts.append(_phrase_fold(packed, plain_words, plain_n))
     if not parts:
-        return spark.createDataFrame([], "group_id int, doc_id long, n_occ long")
+        return empty_df(spark, "group_id int, doc_id long, n_occ long")
     u = parts[0]
     for p in parts[1:]:
         u = u.unionByName(p)
@@ -539,9 +538,9 @@ def _phrase_fold(
     set, broadcast) prunes the shuffle to docs that can match."""
     spark = packed.sparkSession
     wt = F.broadcast(
-        spark.createDataFrame(word_rows, "group_id int, term string, idx int")
+        driver_df(spark, word_rows, "group_id int, term string, idx int")
     )
-    nw = F.broadcast(spark.createDataFrame(n_rows, "group_id int, n_words int"))
+    nw = F.broadcast(driver_df(spark, n_rows, "group_id int, n_words int"))
     all_words = sorted({r[1] for r in word_rows})
     shifted = (
         packed.filter(F.col("term").isin(all_words))
@@ -616,16 +615,14 @@ def search_phrase_bm25(
     p = index.cfg.bm25
     words_by_q = {qid: tokenize_text(text, prof) for qid, text, _ in queries}
     all_words = sorted({w for ws in words_by_q.values() for w in ws})
-    idf_map = {
-        r["term"]: float(r["idf"])
-        for r in index.lexicon.filter(F.col("term").isin(all_words))
-        .select("term", "idf").collect()
-    } if all_words else {}
+    lex = index.lexicon_slice(all_words, ("term", "idf"))
+    idf_map = dict(zip(lex["term"], lex["idf"].astype(float)))
     occ = search_phrase_positions(
         positions, [(qid, text, 2**31 - 1) for qid, text, _ in queries], prof
     ).select("query_id", "doc_id", "n_occ")
     meta = F.broadcast(
-        spark.createDataFrame(
+        driver_df(
+            spark,
             [
                 (qid, sum(idf_map.get(w, 0.0) for w in words_by_q[qid]), int(k))
                 for qid, _, k in queries
@@ -733,8 +730,8 @@ def phrase_ok_counts(
         )}
         core_rows = [(gid_of[(q, ph)], w, j) for q, ph, w, j in word_rows]
         nt = F.broadcast(
-            spark.createDataFrame(
-                [(gid_of[(q, ph)], q, ph) for q, ph, _n in clause_n],
+            driver_df(
+                spark, [(gid_of[(q, ph)], q, ph) for q, ph, _n in clause_n],
                 "group_id int, qid int, ph int",
             )
         )
@@ -744,7 +741,7 @@ def phrase_ok_counts(
             .select(F.col("qid").alias("query_id"), "doc_id", "ph")
         )
     if not parts:
-        return spark.createDataFrame([], "query_id int, doc_id long, n_ok long")
+        return empty_df(spark, "query_id int, doc_id long, n_ok long")
     u = parts[0]
     for p in parts[1:]:
         u = u.unionByName(p)
@@ -806,9 +803,7 @@ def search_slop_positions(
             )
         )
     if not parts:
-        return spark.createDataFrame(
-            [], "query_id int, rank int, doc_id long, n_spans long"
-        )
+        return empty_df(spark, "query_id int, rank int, doc_id long, n_spans long")
     u = parts[0]
     for p in parts[1:]:
         u = u.unionByName(p)
@@ -898,9 +893,7 @@ def search_multi_phrase(
         k_by_q[int(qid)] = int(k)
         for i, alts in enumerate(analyzed):
             slot_rows.extend((int(qid), t, i) for t in alts)
-    empty = spark.createDataFrame(
-        [], "query_id int, rank int, doc_id long, n_occ long"
-    )
+    empty = empty_df(spark, "query_id int, rank int, doc_id long, n_occ long")
     if not slot_rows:
         return empty
 
@@ -943,7 +936,7 @@ def search_multi_phrase(
     parts: list[DataFrame] = []
     if single_rows:
         st = F.broadcast(
-            spark.createDataFrame(single_rows, "query_id int, term string")
+            driver_df(spark, single_rows, "query_id int, term string")
         )
         parts.append(
             packed.filter(F.col("term").isin(sorted({t for _, t in single_rows})))
@@ -953,10 +946,10 @@ def search_multi_phrase(
         )
     if fold_rows:
         wt = F.broadcast(
-            spark.createDataFrame(fold_rows, "query_id int, term string, idx int")
+            driver_df(spark, fold_rows, "query_id int, term string, idx int")
         )
         nw = F.broadcast(
-            spark.createDataFrame(fold_n, "query_id int, n_slots int")
+            driver_df(spark, fold_n, "query_id int, n_slots int")
         )
         shifted = (
             packed.filter(
@@ -974,7 +967,7 @@ def search_multi_phrase(
         )
         if pre_rows:
             pt = F.broadcast(
-                spark.createDataFrame(pre_rows, "query_id int, term string")
+                driver_df(spark, pre_rows, "query_id int, term string")
             )
             pre = F.broadcast(
                 packed.filter(
@@ -1021,8 +1014,8 @@ def search_multi_phrase(
     for p in parts[1:]:
         occ = occ.unionByName(p)
     meta = F.broadcast(
-        spark.createDataFrame(
-            [(q, k_by_q[q]) for q in sorted(k_by_q)], "query_id int, k int"
+        driver_df(
+            spark, [(q, k_by_q[q]) for q in sorted(k_by_q)], "query_id int, k int"
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("n_occ"), F.asc("doc_id"))

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from org_rdkit_lucene_spark.config import candidate_cap
 from org_rdkit_lucene_spark.functions.codecs import decode_ints, delta_decode
 from org_rdkit_lucene_spark.functions.tokenizer import tokenize_text
-from org_rdkit_lucene_spark.operators.build import InvertedIndex
+from org_rdkit_lucene_spark.operators.build import InvertedIndex, driver_df, empty_df
 
 RESULT_SCHEMA = "query_id int, rank int, doc_id long, score_q long"
 
@@ -103,8 +103,17 @@ def _make_decode_blocks(
     return _decode_blocks
 
 
+# Postings blocks per decode task: a Python task's start-up (~0.27 s of
+# worker CPU) equals ~2,000 block decodes (~0.14 ms each), both measured
+# at local[2] on a 4-core x86 host (CLAUDE.md, fixed costs).
+DECODE_BLOCKS_PER_TASK = 2048
+
+
 def decoded_postings(
-    index: InvertedIndex, terms: list[str], term_ids: dict | None = None
+    index: InvertedIndex,
+    terms: list[str],
+    term_ids: dict | None = None,
+    dfs: pd.Series | None = None,
 ) -> DataFrame:
     """Decode postings for the given terms only — LIVE versions only.
 
@@ -115,8 +124,15 @@ def decoded_postings(
     versions against the view's kill pairs (bounded by
     ``MAX_KILL_PAIRS``, exactly as the WAND kernel is).
     ``term_ids`` switches the term column to the int fast path (see
-    :func:`_make_decode_blocks`)."""
-    blocks = index.postings.filter(F.col("term").isin(list(set(terms))))
+    :func:`_make_decode_blocks`). The scan coalesces to one task per
+    ``DECODE_BLOCKS_PER_TASK`` of the terms' Σ⌈df/block_size⌉ blocks
+    (``dfs``: the caller's lexicon slice; None reads it here)."""
+    if dfs is None:
+        dfs = index.lexicon_slice(terms, ("term", "df"))["df"]
+    n_blocks = int(np.ceil(np.asarray(dfs, np.float64) / index.cfg.block_size).sum())
+    blocks = index.postings.filter(F.col("term").isin(list(set(terms)))).coalesce(
+        max(1, -(-n_blocks // DECODE_BLOCKS_PER_TASK))
+    )
     kill = index.kill_pairs() if hasattr(index, "kill_pairs") else None
     tcol = "term string" if term_ids is None else "tid int"
     return blocks.mapInPandas(
@@ -181,17 +197,11 @@ def _bm25_scored(
     spark = index.spark
     p = index.cfg.bm25
     terms = qterms["term"].unique().tolist()
-    lex_pdf = (
-        index.lexicon.filter(F.col("term").isin(terms))
-        .select("term", "idf", "df", "cf")
-        .toPandas()
-    )
-    qw = qterms.merge(lex_pdf, on="term")
+    lex = index.lexicon_slice(terms)
+    qw = qterms.merge(lex, on="term")
     if len(qw) == 0:
         empty = _SCORED_SCHEMA_MT if with_matched else _SCORED_SCHEMA
-        return spark.createDataFrame([], empty), {
-            "disjunctive": 0, "conjunctive": 0,
-        }
+        return empty_df(spark, empty), {"disjunctive": 0, "conjunctive": 0}
     per_q = qw.groupby("query_id")["df"].agg(["sum", "min"])
     # distinct-CANDIDATE upper bounds for the rank stage: Σdf counts a
     # doc once per matched term, so it can exceed the corpus size —
@@ -235,7 +245,7 @@ def _bm25_scored(
             qw[["query_id", "n_terms", "k"]].drop_duplicates("query_id")
         )
     )
-    flat = decoded_postings(index, terms, term_ids=term_ids)
+    flat = decoded_postings(index, terms, term_ids=term_ids, dfs=lex["df"])
     if sim is None:
         contrib = (
             F.col("w")
@@ -264,6 +274,16 @@ def _bm25_scored(
         )
     )
     return scored, est
+
+
+def _match_mode(scored: DataFrame, mode: str) -> DataFrame:
+    """The match law of ``mode`` over a scored stream: conjunctive keeps
+    docs matching every query term, disjunctive keeps all."""
+    if mode == "conjunctive":
+        return scored.filter(F.col("n_matched") == F.col("n_terms"))
+    if mode != "disjunctive":
+        raise ValueError(f"unknown mode {mode!r}")
+    return scored
 
 
 def _quantize(col, decimals: int):
@@ -401,12 +421,9 @@ def search(
 
     qterms = tokenize_queries(queries, index.cfg.tokenizer)
     if len(qterms) == 0:
-        return index.spark.createDataFrame([], RESULT_SCHEMA)
+        return empty_df(index.spark, RESULT_SCHEMA)
     scored, est = _bm25_scored(index, qterms, sim=resolve_similarity(similarity))
-    if mode == "conjunctive":
-        scored = scored.filter(F.col("n_matched") == F.col("n_terms"))
-    elif mode != "disjunctive":
-        raise ValueError(f"unknown mode {mode!r}")
+    scored = _match_mode(scored, mode)
     return rank_topk(
         scored,
         index.cfg.bm25.score_decimals,
@@ -427,16 +444,15 @@ def search_after(
     spark = index.spark
     qterms = tokenize_queries(queries, index.cfg.tokenizer)
     if len(qterms) == 0:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return empty_df(spark, RESULT_SCHEMA)
     scored, est = _bm25_scored(index, qterms)
-    if mode == "conjunctive":
-        scored = scored.filter(F.col("n_matched") == F.col("n_terms"))
+    scored = _match_mode(scored, mode)
     dec = index.cfg.bm25.score_decimals
     scored = scored.withColumn("score_q", _quantize(F.col("score_raw"), dec))
     aft = F.broadcast(
-        spark.createDataFrame(
-            [(qid, sq, did) for qid, (sq, did) in after.items()],
-            schema="query_id int, after_score_q long, after_doc_id long",
+        driver_df(
+            spark, [(qid, sq, did) for qid, (sq, did) in after.items()],
+            "query_id int, after_score_q long, after_doc_id long",
         )
     )
     scored = scored.join(aft, "query_id", "left").filter(
@@ -447,7 +463,7 @@ def search_after(
     return _two_stage_rank(
         scored,
         "k",
-        est_candidates=est["conjunctive" if mode == "conjunctive" else "disjunctive"],
+        est_candidates=est[mode],
         max_k=max(k for _, _, k in queries),
     )
 
@@ -499,7 +515,7 @@ def search_synonyms(
     p = index.cfg.bm25
     qterms = tokenize_queries(queries, prof)
     if len(qterms) == 0:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return empty_df(spark, RESULT_SCHEMA)
     syn = {
         _norm_synonym(kw, prof): sorted(
             {_norm_synonym(a, prof) for a in alts}
@@ -514,11 +530,7 @@ def search_synonyms(
         for t in dict.fromkeys([r.term, *syn.get(r.term, [])]):
             members.append((int(r.gid), t))
     all_terms = sorted({t for _, t in members})
-    lex_pdf = (
-        index.lexicon.filter(F.col("term").isin(all_terms))
-        .select("term", "df")
-        .toPandas()
-    )
+    lex_pdf = index.lexicon_slice(all_terms, ("term", "df"))
     df_map = dict(zip(lex_pdf["term"], lex_pdf["df"].astype("int64")))
     term_ids = {t: i for i, t in enumerate(all_terms)}
     mem_pdf = pd.DataFrame(
@@ -530,7 +542,7 @@ def search_synonyms(
     gdf = mem_pdf.assign(df=mem_pdf["term"].map(df_map)).groupby("gid")["df"].max()
     meta = qterms.assign(df=qterms["gid"].map(gdf)).dropna(subset=["df"])
     if len(meta) == 0:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return empty_df(spark, RESULT_SCHEMA)
     idf = np.log(1.0 + (n - meta["df"] + 0.5) / (meta["df"] + 0.5))
     meta = meta.assign(w=meta["qtf"].astype("float64") * idf)
     # candidate bounds from member dfs (a group's candidates are at
@@ -565,7 +577,7 @@ def search_synonyms(
             qterms[["query_id", "n_terms", "k"]].drop_duplicates("query_id")
         )
     )
-    flat = decoded_postings(index, all_terms, term_ids=term_ids)
+    flat = decoded_postings(index, all_terms, term_ids=term_ids, dfs=lex_pdf["df"])
     # pre-partition by (query_id, doc_id) so BOTH aggregations ride ONE
     # exchange: HashPartitioning(q, d) satisfies ClusteredDistribution
     # (q, gid, d). The first agg loses its map-side partial, which is
@@ -597,10 +609,7 @@ def search_synonyms(
         )
         .join(qmeta, "query_id")
     )
-    if mode == "conjunctive":
-        scored = scored.filter(F.col("n_matched") == F.col("n_terms"))
-    elif mode != "disjunctive":
-        raise ValueError(f"unknown mode {mode!r}")
+    scored = _match_mode(scored, mode)
     return rank_topk(
         scored,
         p.score_decimals,
@@ -716,9 +725,9 @@ def search_two_phase(
     capped = [(qid, text, candidate_cap(k)) for qid, text, k in queries]
     cands = search(index, capped, mode="conjunctive")
     qdf = F.broadcast(
-        index.spark.createDataFrame(
-            [(qid, text, k) for qid, text, k in queries],
-            schema="query_id int, qtext string, final_k int",
+        driver_df(
+            index.spark, [(qid, text, k) for qid, text, k in queries],
+            "query_id int, qtext string, final_k int",
         )
     )
     joined = (
@@ -755,10 +764,9 @@ def max_scores(
     score per query — equals the rank-1 score of :func:`search`."""
     qterms = tokenize_queries(queries, index.cfg.tokenizer)
     if len(qterms) == 0:
-        return index.spark.createDataFrame([], "query_id int, max_score_q long")
+        return empty_df(index.spark, "query_id int, max_score_q long")
     scored, _ = _bm25_scored(index, qterms)
-    if mode == "conjunctive":
-        scored = scored.filter(F.col("n_matched") == F.col("n_terms"))
+    scored = _match_mode(scored, mode)
     dec = index.cfg.bm25.score_decimals
     return (
         scored.withColumn("score_q", _quantize(F.col("score_raw"), dec))
@@ -793,20 +801,20 @@ def explain_scores(
     qterms = tokenize_queries(queries, index.cfg.tokenizer)
     spark = index.spark
     if len(qterms) == 0:
-        return spark.createDataFrame([], EXPLAIN_SCHEMA)
+        return empty_df(spark, EXPLAIN_SCHEMA)
     hits = search(index, queries, mode).select("query_id", "rank", "doc_id")
     p = index.cfg.bm25
     terms = qterms["term"].unique().tolist()
-    lex_pdf = index.lexicon.filter(F.col("term").isin(terms)).select("term", "idf").toPandas()
+    lex_pdf = index.lexicon_slice(terms, ("term", "idf", "df"))
     qw = qterms.merge(lex_pdf, on="term")
     if len(qw) == 0:
-        return spark.createDataFrame([], EXPLAIN_SCHEMA)
+        return empty_df(spark, EXPLAIN_SCHEMA)
     # same driver-side fused weight as _bm25_scored: w = qtf * idf in
     # float64, so the per-term product association matches the scoring
     # path (and the SQL twin) bit-for-bit
     qw = qw.assign(w=qw["qtf"] * qw["idf"])
     qdf = F.broadcast(spark.createDataFrame(qw[["query_id", "term", "w"]]))
-    flat = decoded_postings(index, terms)
+    flat = decoded_postings(index, terms, dfs=lex_pdf["df"])
     contrib = flat.join(qdf, "term").withColumn(
         "contrib",
         F.col("w")
@@ -849,12 +857,9 @@ def search_sorted(
     qterms = tokenize_queries(queries, index.cfg.tokenizer)
     schema = "query_id int, rank int, doc_id long, sort_key long"
     if len(qterms) == 0:
-        return index.spark.createDataFrame([], schema)
+        return empty_df(index.spark, schema)
     scored, est = _bm25_scored(index, qterms)
-    if mode == "conjunctive":
-        scored = scored.filter(F.col("n_matched") == F.col("n_terms"))
-    elif mode != "disjunctive":
-        raise ValueError(f"unknown mode {mode!r}")
+    scored = _match_mode(scored, mode)
     meta = index.docmeta.select(
         "doc_id", F.col(sort_field).cast("long").alias("score_q")
     )
@@ -1643,8 +1648,8 @@ def _field_hits(
         hits = exp
     if field_rows:
         fdf = F.broadcast(
-            spark.createDataFrame(
-                field_rows, "query_id int, fld string, val string, w double"
+            driver_df(
+                spark, field_rows, "query_id int, fld string, val string, w double"
             )
         )
         cond = (
@@ -1656,8 +1661,8 @@ def _field_hits(
         hits = lit_hits if hits is None else hits.unionByName(lit_hits)
     if field_phrase_rows:
         fpdf = F.broadcast(
-            spark.createDataFrame(
-                field_phrase_rows,
+            driver_df(
+                spark, field_phrase_rows,
                 "query_id int, fld string, vals array<string>, slop int, w double",
             )
         )
@@ -1818,7 +1823,7 @@ def search_syntax(
                 slop_rows.append((qid, ph, s))
 
     if not scoring and not field_rows and not fp_rows and not fexp_rows:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return empty_df(spark, RESULT_SCHEMA)
     est_disj: int | None = None
     if scoring:
         qterms = pd.DataFrame(scoring, columns=["query_id", "term", "qtf", "n_terms", "k"])
@@ -1828,7 +1833,7 @@ def search_syntax(
         # the disjunctive bound stays a valid upper bound downstream
         est_disj = est["disjunctive"]
     else:
-        scored = spark.createDataFrame([], "query_id int, doc_id long, score_raw double")
+        scored = empty_df(spark, "query_id int, doc_id long, score_raw double")
     if field_rows or fp_rows or fexp_rows:
         # SHOULD union: field-only matches enter the candidate set; a
         # doc matching both sides sums BM25 + clause boosts — the
@@ -1861,7 +1866,7 @@ def search_syntax(
     ]
     if must_terms_rows:
         mt = F.broadcast(
-            spark.createDataFrame(must_terms_rows, "query_id int, term string")
+            driver_df(spark, must_terms_rows, "query_id int, term string")
         )
         flat = decoded_postings(index, sorted({t for _, t in must_terms_rows}))
         must_hit = (
@@ -1875,7 +1880,7 @@ def search_syntax(
     else:
         scored = scored.withColumn("n_must_matched", F.lit(0))
     need = F.broadcast(
-        spark.createDataFrame(must_counts, "query_id int, n_must int, k_final int")
+        driver_df(spark, must_counts, "query_id int, n_must int, k_final int")
     )
     scored = scored.join(need, "query_id").filter(
         F.col("n_must_matched") == F.col("n_must")
@@ -1883,7 +1888,7 @@ def search_syntax(
 
     # excluded terms: anti-join
     if excluded_rows:
-        ex = F.broadcast(spark.createDataFrame(excluded_rows, "query_id int, term string"))
+        ex = F.broadcast(driver_df(spark, excluded_rows, "query_id int, term string"))
         ex_docs = (
             decoded_postings(index, sorted({t for _, t in excluded_rows}))
             .join(ex, "term")
@@ -1906,8 +1911,8 @@ def search_syntax(
                 need_n[qid] += 1
         okc = phrase_ok_counts(positions, clause_rows, prof)
         needp = F.broadcast(
-            spark.createDataFrame(
-                sorted(need_n.items()), "query_id int, n_clauses long"
+            driver_df(
+                spark, sorted(need_n.items()), "query_id int, n_clauses long"
             )
         )
         scored = (
@@ -1926,7 +1931,7 @@ def search_syntax(
     if phrase_rows:
         if corpus_with_ids is None:
             raise ValueError("phrase queries require corpus_with_ids")
-        ph = F.broadcast(spark.createDataFrame(phrase_rows, "query_id int, phrase string"))
+        ph = F.broadcast(driver_df(spark, phrase_rows, "query_id int, phrase string"))
         ok = (
             scored.select("query_id", "doc_id")
             .join(ph, "query_id")
@@ -1936,8 +1941,8 @@ def search_syntax(
             .agg(F.count("*").alias("n_ph_ok"))
         )
         phn = F.broadcast(
-            spark.createDataFrame(
-                [(qid, len(parsed[qid]["phrases"])) for qid, _, _ in queries],
+            driver_df(
+                spark, [(qid, len(parsed[qid]["phrases"])) for qid, _, _ in queries],
                 "query_id int, n_ph int",
             )
         )
@@ -1956,10 +1961,11 @@ def search_syntax(
         if corpus_with_ids is None:
             raise ValueError("sloppy-phrase queries require corpus_with_ids")
         sp = F.broadcast(
-            spark.createDataFrame(slop_rows, "query_id int, phrase string, slop int")
+            driver_df(spark, slop_rows, "query_id int, phrase string, slop int")
         )
         spn = F.broadcast(
-            spark.createDataFrame(
+            driver_df(
+                spark,
                 [(qid, sum(1 for q, _, _ in slop_rows if q == qid))
                  for qid, _, _ in queries],
                 "query_id int, n_sp int",
@@ -2008,9 +2014,9 @@ def search_syntax(
         # above the cursor in the K2 order before ranking. A pure
         # filter, so every candidate bound stays valid.
         aft = F.broadcast(
-            spark.createDataFrame(
-                [(qid, sq, did) for qid, (sq, did) in after.items()],
-                schema="query_id int, after_score_q long, after_doc_id long",
+            driver_df(
+                spark, [(qid, sq, did) for qid, (sq, did) in after.items()],
+                "query_id int, after_score_q long, after_doc_id long",
             )
         )
         quant = quant.join(aft, "query_id", "left").filter(
@@ -2218,7 +2224,7 @@ def search_boolean(
         terms = boolean_leaf_terms(t)
         rows.extend((qid, term, 1, len(terms), k) for term in terms)
     if not rows:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return empty_df(spark, RESULT_SCHEMA)
     qterms = pd.DataFrame(rows, columns=["query_id", "term", "qtf", "n_terms", "k"])
     scored, est = _bm25_scored(index, qterms, with_matched=True)
     cond = F.lit(False)
@@ -2239,10 +2245,9 @@ def hit_counts(index: InvertedIndex, queries: list[tuple[int, str, int]], mode: 
     total matching docs per query, uncapped."""
     qterms = tokenize_queries(queries, index.cfg.tokenizer)
     if len(qterms) == 0:
-        return index.spark.createDataFrame([], "query_id int, total_hits long")
+        return empty_df(index.spark, "query_id int, total_hits long")
     scored, _ = _bm25_scored(index, qterms)
-    if mode == "conjunctive":
-        scored = scored.filter(F.col("n_matched") == F.col("n_terms"))
+    scored = _match_mode(scored, mode)
     return scored.groupBy("query_id").agg(F.count("*").alias("total_hits")).select(
         F.col("query_id").cast("int").alias("query_id"), "total_hits"
     )
@@ -2281,7 +2286,7 @@ def more_like_this(
 
     spark = index.spark
     if not requests:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return empty_df(spark, RESULT_SCHEMA)
     anchors = sorted({a for _, a, _ in requests})
     rows = (
         corpus_with_ids.filter(F.col("doc_id").isin(anchors))
@@ -2299,12 +2304,8 @@ def more_like_this(
         tf_by_anchor[a] = tf
     all_terms = sorted(set().union(*tf_by_anchor.values()) or set())
     if not all_terms:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    lex = (
-        index.lexicon.filter(F.col("term").isin(all_terms))
-        .select("term", "idf")
-        .toPandas()
-    )
+        return empty_df(spark, RESULT_SCHEMA)
+    lex = index.lexicon_slice(all_terms, ("term", "idf"))
     idf = dict(zip(lex["term"], lex["idf"]))
 
     quant = float(10 ** index.cfg.bm25.score_decimals)
@@ -2321,12 +2322,12 @@ def more_like_this(
         for _, t in scored_terms:
             qrows.append((qid, t, 1, n, k))
     if not qrows:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return empty_df(spark, RESULT_SCHEMA)
     qterms = pd.DataFrame(qrows, columns=["query_id", "term", "qtf", "n_terms", "k"])
     scored, est = _bm25_scored(index, qterms)
     anchor_df = F.broadcast(
-        spark.createDataFrame(
-            [(qid, a) for qid, a, _ in requests], "query_id long, doc_id long"
+        driver_df(
+            spark, [(qid, a) for qid, a, _ in requests], "query_id long, doc_id long"
         )
     )
     scored = scored.join(anchor_df, ["query_id", "doc_id"], "left_anti")
@@ -2357,12 +2358,9 @@ def facet_counts(
     qterms = tokenize_queries(queries, index.cfg.tokenizer)
     empty_schema = "query_id int, facet string, n_docs long"
     if len(qterms) == 0:
-        return index.spark.createDataFrame([], empty_schema)
+        return empty_df(index.spark, empty_schema)
     scored, _ = _bm25_scored(index, qterms)
-    if mode == "conjunctive":
-        scored = scored.filter(F.col("n_matched") == F.col("n_terms"))
-    elif mode != "disjunctive":
-        raise ValueError(f"unknown mode {mode!r}")
+    scored = _match_mode(scored, mode)
     meta = index.docmeta.select(
         "doc_id", F.col(facet_col).cast("string").alias("facet")
     )
@@ -2399,12 +2397,12 @@ def range_facet_counts(
     spark = index.spark
     out_schema = "query_id int, facet string, n_docs long"
     if not ranges:
-        return spark.createDataFrame([], out_schema)
+        return empty_df(spark, out_schema)
     qterms = tokenize_queries(queries, index.cfg.tokenizer)
     rng = F.broadcast(
-        spark.createDataFrame(
-            [(str(lbl), int(lo), int(hi)) for lbl, lo, hi in ranges],
-            schema="facet string, lo long, hi long",
+        driver_df(
+            spark, [(str(lbl), int(lo), int(hi)) for lbl, lo, hi in ranges],
+            "facet string, lo long, hi long",
         )
     )
     qids = sorted({qid for qid, _, _ in queries})
@@ -2412,18 +2410,15 @@ def range_facet_counts(
     # a left join from the driver-literal query×range grid (the grid is
     # the stream side, so the broadcast goes on `counted`, which is
     # bounded by |queries|·|ranges| rows)
-    grid = spark.createDataFrame(
-        [(q,) for q in qids], schema="query_id int"
+    grid = driver_df(
+        spark, [(q,) for q in qids], "query_id int"
     ).crossJoin(rng.select("facet"))
     if len(qterms) == 0:
         return grid.select(
             "query_id", "facet", F.lit(0).cast("long").alias("n_docs")
         )
     scored, _ = _bm25_scored(index, qterms)
-    if mode == "conjunctive":
-        scored = scored.filter(F.col("n_matched") == F.col("n_terms"))
-    elif mode != "disjunctive":
-        raise ValueError(f"unknown mode {mode!r}")
+    scored = _match_mode(scored, mode)
     meta = index.docmeta.select(
         "doc_id", F.col(facet_col).cast("long").alias("fval")
     )
@@ -2495,7 +2490,7 @@ def taxonomy_facet_counts(
         raise ValueError("depth must be >= 1")
     scored = _taxonomy_candidates(index, queries, mode)
     if scored is None:
-        return index.spark.createDataFrame([], _TAXONOMY_SCHEMA)
+        return empty_df(index.spark, _TAXONOMY_SCHEMA)
     meta = index.docmeta.select(
         "doc_id", F.col(path_col).cast("string").alias("fp")
     )
@@ -2552,10 +2547,7 @@ def _taxonomy_candidates(index, queries, mode):
     if len(qterms) == 0:
         return None
     scored, _ = _bm25_scored(index, qterms)
-    if mode == "conjunctive":
-        scored = scored.filter(F.col("n_matched") == F.col("n_terms"))
-    elif mode != "disjunctive":
-        raise ValueError(f"unknown mode {mode!r}")
+    scored = _match_mode(scored, mode)
     return scored
 
 
@@ -2577,7 +2569,7 @@ def _taxonomy_children(
 
     scored = _taxonomy_candidates(index, queries, mode)
     if scored is None:
-        return index.spark.createDataFrame([], _TAXONOMY_SCHEMA)
+        return empty_df(index.spark, _TAXONOMY_SCHEMA)
     meta = (
         index.docmeta.select(
             "doc_id", F.col(path_col).cast("string").alias("fp")
@@ -2644,12 +2636,9 @@ def search_drill_down(
     cons = _drill_constraints(drill_down)
     qterms = tokenize_queries(queries, index.cfg.tokenizer)
     if len(qterms) == 0:
-        return index.spark.createDataFrame([], RESULT_SCHEMA)
+        return empty_df(index.spark, RESULT_SCHEMA)
     scored, est = _bm25_scored(index, qterms)
-    if mode == "conjunctive":
-        scored = scored.filter(F.col("n_matched") == F.col("n_terms"))
-    elif mode != "disjunctive":
-        raise ValueError(f"unknown mode {mode!r}")
+    scored = _match_mode(scored, mode)
     meta = index.docmeta
     for dim, val in cons:
         meta = meta.filter(F.col(dim).cast("string") == val)
@@ -2690,12 +2679,9 @@ def drill_sideways_counts(
     qterms = tokenize_queries(queries, index.cfg.tokenizer)
     out_schema = "query_id int, dim string, facet string, n_docs long"
     if len(qterms) == 0:
-        return index.spark.createDataFrame([], out_schema)
+        return empty_df(index.spark, out_schema)
     scored, _ = _bm25_scored(index, qterms)
-    if mode == "conjunctive":
-        scored = scored.filter(F.col("n_matched") == F.col("n_terms"))
-    elif mode != "disjunctive":
-        raise ValueError(f"unknown mode {mode!r}")
+    scored = _match_mode(scored, mode)
     need = sorted({d for d in dims} | {d for d, _ in cons})
     meta = index.docmeta.select(
         "doc_id", *[F.col(d).cast("string").alias(d) for d in need]
@@ -2759,9 +2745,7 @@ def search_snippets(
     hits = search(index, queries)
     qt = tokenize_queries(queries, index.cfg.tokenizer)
     if len(qt) == 0:
-        return spark.createDataFrame(
-            [], RESULT_SCHEMA + ", snippet string"
-        )
+        return empty_df(spark, RESULT_SCHEMA + ", snippet string")
     tdf = F.broadcast(
         spark.createDataFrame(
             qt[["query_id", "term"]].drop_duplicates()
@@ -2863,7 +2847,7 @@ def search_multi_field(
         n_docs_max = max(n_docs_max, idx_f.n_docs)
         dec = idx_f.cfg.bm25.score_decimals if dec is None else dec
     if not parts:
-        return fields[0][0].spark.createDataFrame([], RESULT_SCHEMA)
+        return empty_df(fields[0][0].spark, RESULT_SCHEMA)
     u = parts[0]
     for p in parts[1:]:
         u = u.unionByName(p)
@@ -2885,29 +2869,20 @@ def search_auto(
 ) -> DataFrame:
     """Cost-based physical routing for top-k search — the engine's
     query-planner surface: estimate the per-query candidate bound from
-    the lexicon df slice (driver metadata, zero jobs beyond the slice
-    the chosen path fetches anyway) and route the WHOLE batch to the
-    block-max WAND kernel when the bound exceeds
-    ``WAND_ROUTE_MIN_CANDIDATES``, else to the DataFrame path. Both
-    paths are result-identical (tested), so routing is purely a
-    physical-plan decision — the Lucene analog is the scorer choice
-    BooleanQuery makes per segment."""
+    the lexicon df slice (no job on a base index, one on a segmented
+    view) and route the WHOLE batch to the block-max WAND kernel when
+    the bound exceeds ``WAND_ROUTE_MIN_CANDIDATES``, else to the
+    DataFrame path. Both paths are result-identical (tested), so
+    routing is purely a physical-plan decision — the Lucene analog is
+    the scorer choice BooleanQuery makes per segment."""
     from org_rdkit_lucene_spark.operators.wand import search_wand
 
     qterms = tokenize_queries(queries, index.cfg.tokenizer)
     if len(qterms) == 0:
-        return index.spark.createDataFrame([], RESULT_SCHEMA)
-    lex = (
-        index.lexicon.filter(F.col("term").isin(qterms["term"].unique().tolist()))
-        .select("term", "df")
-        .toPandas()
-    )
-    qw = qterms.merge(lex, on="term")
-    if len(qw) == 0:
-        est = 0
-    else:
-        per_q = qw.groupby("query_id")["df"].agg(["sum", "min"])
-        est = int(per_q["sum" if mode == "disjunctive" else "min"].max())
+        return empty_df(index.spark, RESULT_SCHEMA)
+    lex = index.lexicon_slice(qterms["term"].unique(), ("term", "df"))
+    per_q = qterms.merge(lex, on="term").groupby("query_id")["df"].agg(["sum", "min"])
+    est = int(per_q["sum" if mode == "disjunctive" else "min"].max()) if len(per_q) else 0
     if est >= WAND_ROUTE_MIN_CANDIDATES:
         return search_wand(index, queries, mode=mode)
     return search(index, queries, mode=mode)
@@ -2940,12 +2915,9 @@ def search_grouped(
         "hit_rank int, doc_id long, score_q long"
     )
     if len(qterms) == 0:
-        return index.spark.createDataFrame([], out_schema)
+        return empty_df(index.spark, out_schema)
     scored, _ = _bm25_scored(index, qterms)
-    if mode == "conjunctive":
-        scored = scored.filter(F.col("n_matched") == F.col("n_terms"))
-    elif mode != "disjunctive":
-        raise ValueError(f"unknown mode {mode!r}")
+    scored = _match_mode(scored, mode)
     dec = index.cfg.bm25.score_decimals
     # the group key is lowercased — the same normalization every other
     # metadata-field law uses, and the SQL twin mirrors it
@@ -3076,12 +3048,9 @@ def search_block_join(
         "query_id int, rank int, parent string, score_q long, n_children long"
     )
     if len(qterms) == 0:
-        return index.spark.createDataFrame([], out_schema)
+        return empty_df(index.spark, out_schema)
     scored, _ = _bm25_scored(index, qterms)
-    if mode == "conjunctive":
-        scored = scored.filter(F.col("n_matched") == F.col("n_terms"))
-    elif mode != "disjunctive":
-        raise ValueError(f"unknown mode {mode!r}")
+    scored = _match_mode(scored, mode)
     dec = index.cfg.bm25.score_decimals
     # the parent key shares the lowercase normalization of every other
     # metadata-field law (and the SQL twin mirrors it)
@@ -3098,7 +3067,8 @@ def search_block_join(
     )
     if after:
         cur = F.broadcast(
-            index.spark.createDataFrame(
+            driver_df(
+                index.spark,
                 [
                     (int(q), int(s), None if p is None else str(p))
                     for q, (s, p) in after.items()
@@ -3190,12 +3160,9 @@ def search_join(
     qterms = tokenize_queries(queries, index.cfg.tokenizer)
     out_schema = "query_id int, rank int, doc_id long, score_q long"
     if len(qterms) == 0:
-        return index.spark.createDataFrame([], out_schema)
+        return empty_df(index.spark, out_schema)
     scored, _ = _bm25_scored(index, qterms)
-    if mode == "conjunctive":
-        scored = scored.filter(F.col("n_matched") == F.col("n_terms"))
-    elif mode != "disjunctive":
-        raise ValueError(f"unknown mode {mode!r}")
+    scored = _match_mode(scored, mode)
     dec = index.cfg.bm25.score_decimals
     from_dm = index.docmeta.select(
         "doc_id", F.lower(F.col(from_field)).alias("jval")
@@ -3253,7 +3220,7 @@ def suggest_terms(
     out_schema = "word string, rank int, term string, dist int, df long"
     uniq = sorted({(w.lower(), int(k)) for w, k in words if w})
     if not uniq:
-        return index.spark.createDataFrame([], out_schema)
+        return empty_df(index.spark, out_schema)
     lex = index.lexicon.select("term", "df")
     uni = None
     for w, k in uniq:
@@ -3307,7 +3274,7 @@ def suggest_completions(
     out_schema = "prefix string, rank int, term string, df long"
     uniq = sorted({(p.lower(), int(k)) for p, k in prefixes if p})
     if not uniq:
-        return index.spark.createDataFrame([], out_schema)
+        return empty_df(index.spark, out_schema)
     lex = index.lexicon.select("term", "df")
     uni = None
     for p, k in uniq:

@@ -87,12 +87,19 @@ from pyspark.sql.streaming import StreamingQuery
 from org_rdkit_lucene_spark.config import IndexConfig
 from org_rdkit_lucene_spark.lock import LockHeldError, write_lock  # noqa: F401
 from org_rdkit_lucene_spark.operators.build import (
+    LEXICON_COLS,
     POSTINGS_SCHEMA,
     InvertedIndex,
-    _make_cold_encoder,
+    _make_cold_encoder_arrow,
     _make_spimi_fn,
     _write_manifest,
+    driver_df,
+    empty_df,
     encode_postings,
+    idf_col,
+    read_hot_terms,
+    read_table,
+    write_lexicon,
 )
 from org_rdkit_lucene_spark.operators.positions import (
     POSITIONS_NAME,
@@ -333,7 +340,9 @@ def _build_segment_locked(
     blocks = (
         flat.repartition(n_parts, "term")
         .sortWithinPartitions("term", "doc_id")
-        .mapInPandas(_make_cold_encoder(cfg, seg_avgdl or 1.0), schema=POSTINGS_SCHEMA)
+        .mapInArrow(
+            _make_cold_encoder_arrow(cfg, seg_avgdl or 1.0), schema=POSTINGS_SCHEMA
+        )
     )
     blocks.write.mode("overwrite").parquet(os.path.join(seg_dir, "postings.parquet"))
     flat.unpersist()
@@ -394,7 +403,7 @@ def delete_docs(
     deletes nest midpoints (j+0.5, j+0.75, ...), always below ``j+1``.
     Still unsafe while a stream is ACTIVE (a concurrently-committing
     batch could interleave with the prior-view read)."""
-    ids = spark.createDataFrame([(int(i),) for i in doc_ids], "doc_id long")
+    ids = driver_df(spark, [(int(i),) for i in doc_ids], "doc_id long")
     return _delete_ids_df(spark, base_index_dir, ids, cfg, seg_name)
 
 
@@ -543,11 +552,11 @@ class SegmentedIndex:
     def maybe_compact(
         self, out_dir: str, max_tombstone_frac: float = 0.2
     ) -> "InvertedIndex | None":
-        """ENFORCE the kill-map bound: the driver-side kill pairs (and
-        every query's broadcast kill map) grow with tombstone volume
-        since the last compaction — Lucene's background merge is what
-        bounds the reference's deleted-doc overhead, and this is its
-        policy hook. Compacts into ``out_dir`` when tombstones exceed
+        """ENFORCE the kill-map bound: the kill pairs both query kernels
+        ship in their decode closures grow with tombstone volume since
+        the last compaction — Lucene's background merge bounds the
+        reference's deleted-doc overhead; this is its policy hook.
+        Compacts into ``out_dir`` when tombstones exceed
         ``max_tombstone_frac`` of live docs; returns the fresh
         monolithic index (caller switches over), else None."""
         if self.tombstone_frac() <= max_tombstone_frac:
@@ -581,8 +590,9 @@ class SegmentedIndex:
         df = getattr(self.base, name)
         if with_ord:
             df = df.withColumn("seg_ord", F.lit(0))
+        table = "segment_lexicon" if name == "lexicon" else name
         for o, d in self._add_segs:
-            s = self.spark.read.parquet(os.path.join(d, f"{name}.parquet"))
+            s = read_table(self.spark, os.path.join(d, f"{name}.parquet"), table)
             if with_ord:
                 s = s.withColumn("seg_ord", F.lit(o))
             df = df.unionByName(s, allowMissingColumns=True)
@@ -623,8 +633,8 @@ class SegmentedIndex:
             return None
         if self._kill_map is None:
             ids, ords = self._kill_pairs_unbounded()
-            self._kill_map = self.spark.createDataFrame(
-                pd.DataFrame({"doc_id": ids, "kill_ord": ords}),
+            self._kill_map = driver_df(
+                self.spark, pd.DataFrame({"doc_id": ids, "kill_ord": ords}),
                 "doc_id long, kill_ord long",
             )
         return self._kill_map
@@ -743,6 +753,17 @@ class SegmentedIndex:
             )
         return self._live(df)
 
+    def lexicon_slice(self, terms, cols=LEXICON_COLS) -> pd.DataFrame:
+        """The merged lexicon rows of ``terms`` (``cols`` only). One
+        Spark job: idf stays the Spark-computed ``log`` of the merged
+        stats, the bytes a rebuild's lexicon holds — a driver-side numpy
+        ``log`` could differ in the last ulp and break rank identity."""
+        return (
+            self.lexicon.filter(F.col("term").isin(sorted(set(terms))))
+            .select(*cols)
+            .toPandas()
+        )
+
     @property
     def lexicon(self) -> DataFrame:
         """Merged per-term stats: df/cf sum across segments, MINUS the
@@ -773,14 +794,7 @@ class SegmentedIndex:
                 )
                 .filter(F.col("df") > 0)
             )
-        return merged.withColumn(
-            "idf",
-            F.log(
-                F.lit(1.0)
-                + (F.lit(float(self.n_docs)) - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            ),
-        )
+        return merged.withColumn("idf", idf_col(self.n_docs))
 
 
 def _write_flat_run(
@@ -806,7 +820,7 @@ def _write_flat_run(
             "finalized": True,
         },
     )
-    return spark.read.parquet(flat_path).select(*FLAT_COLS).persist()
+    return read_table(spark, flat_path, "flat").persist()
 
 
 def _write_lexicon_postings(
@@ -816,24 +830,10 @@ def _write_lexicon_postings(
     """Stages 3 and 4 of a fold with the batch build's expressions: the
     lexicon (idf under ``n_docs``), then the postings (identical
     hot/cold policy). Unpersists ``flat``."""
-    import pyarrow.parquet as pq
-
     lexicon_path = os.path.join(out_dir, "lexicon.parquet")
-    lex = flat.groupBy("term").agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
-    lex = lex.withColumn(
-        "idf",
-        F.log(
-            F.lit(1.0)
-            + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
-            / (F.col("df") + F.lit(0.5))
-        ),
-    )
-    lex.write.mode("overwrite").parquet(lexicon_path)
-    hot_tbl = pq.read_table(
-        lexicon_path, columns=["term"], filters=[("df", ">=", cfg.hot_term_df)]
-    )
+    write_lexicon(flat, n_docs, lexicon_path)
     blocks = encode_postings(
-        flat, cfg, avgdl, max_doc_id, hot_tbl.column("term").to_pylist()
+        flat, cfg, avgdl, max_doc_id, read_hot_terms(lexicon_path, cfg)
     )
     blocks.write.mode("overwrite").parquet(os.path.join(out_dir, "postings.parquet"))
     flat.unpersist()
@@ -1035,7 +1035,7 @@ def delete_docs_by_query(
     prior = SegmentedIndex.load(spark, base_index_dir, cfg)
     words = sorted(set(tokenize_text(query_text, cfg.tokenizer)))
     if not words:
-        ids = spark.createDataFrame([], "doc_id long")
+        ids = empty_df(spark, "doc_id long")
     else:
         ids = (
             decoded_postings(prior, words)
@@ -1065,8 +1065,8 @@ def delete_docs_by_key(
     the segment dir."""
     prior = SegmentedIndex.load(spark, base_index_dir, cfg)
     kdf = F.broadcast(
-        spark.createDataFrame(
-            [(str(r), str(p), str(c)) for r, p, c in keys],
+        driver_df(
+            spark, [(str(r), str(p), str(c)) for r, p, c in keys],
             "repo string, path string, commit string",
         )
     )

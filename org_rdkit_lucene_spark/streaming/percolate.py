@@ -43,6 +43,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.build import driver_df, empty_df
 from ..operators.query import _quantize, tokenize_queries
 
 #: structural bound on the broadcast registered-query table — beyond
@@ -64,13 +65,7 @@ def _registered_queries(index, queries: list[tuple[int, str, int]]):
     qterms = tokenize_queries(queries, index.cfg.tokenizer)
     if len(qterms) == 0:
         return None
-    lex = (
-        index.lexicon.filter(
-            F.col("term").isin(qterms["term"].unique().tolist())
-        )
-        .select("term", "idf")
-        .toPandas()
-    )
+    lex = index.lexicon_slice(qterms["term"].unique(), ("term", "idf"))
     qw = qterms.merge(lex, on="term")  # unseen terms drop (search's law)
     qw = qw.assign(w=qw["qtf"].astype("float64") * qw["idf"])
     if len(qw) == 0:
@@ -91,8 +86,10 @@ def _registered_queries(index, queries: list[tuple[int, str, int]]):
                 int(grp["n_terms"].iloc[0]),
             )
         )
-    qdf = index.spark.createDataFrame(
-        rows, schema="query_id int, tidxs array<int>, ws array<double>, n_terms int"
+    qdf = driver_df(
+        index.spark,
+        rows,
+        "query_id int, tidxs array<int>, ws array<double>, n_terms int",
     )
     return qdf, union
 
@@ -168,7 +165,7 @@ def percolate(
     spark = index.spark
     reg = _registered_queries(index, queries)
     if reg is None:
-        return spark.createDataFrame([], PERCOLATE_SCHEMA)
+        return empty_df(spark, PERCOLATE_SCHEMA)
     qdf, term_union = reg
     p = index.cfg.bm25
     avgdl = float(index.avgdl)
@@ -329,11 +326,7 @@ def _registered_syntax_queries(index, queries: list[tuple[int, str, int]]):
         need_idf.update(counts)
     if not per_q:
         return None
-    lex = (
-        index.lexicon.filter(F.col("term").isin(sorted(need_idf)))
-        .select("term", "idf")
-        .toPandas()
-    )
+    lex = index.lexicon_slice(sorted(need_idf), ("term", "idf"))
     idf = dict(zip(lex["term"], lex["idf"]))
     union_terms: set[str] = set()
     kept = []
@@ -362,9 +355,10 @@ def _registered_syntax_queries(index, queries: list[tuple[int, str, int]]):
                 sorted(tidx[t] for t in excl),
             )
         )
-    qdf = index.spark.createDataFrame(
+    qdf = driver_df(
+        index.spark,
         rows,
-        schema=(
+        (
             "query_id int, tidxs array<int>, ws array<double>, "
             "must_idxs array<int>, n_must int, not_idxs array<int>"
         ),
@@ -396,7 +390,7 @@ def percolate_syntax(
     spark = index.spark
     reg = _registered_syntax_queries(index, queries)
     if reg is None:
-        return spark.createDataFrame([], PERCOLATE_SCHEMA)
+        return empty_df(spark, PERCOLATE_SCHEMA)
     qdf, term_union = reg
     p = index.cfg.bm25
     avgdl = float(index.avgdl)
