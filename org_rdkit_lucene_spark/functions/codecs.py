@@ -139,14 +139,13 @@ def varbyte_decode_many(bufs: list[bytes]) -> tuple[np.ndarray, np.ndarray]:
     if not is_last[ends[nz] - 1].all():
         raise ValueError("truncated varbyte stream")
     group = np.concatenate(([0], np.cumsum(is_last)[:-1]))
-    n_vals = int(is_last.sum())
     starts_of_group = np.concatenate(([0], np.flatnonzero(is_last)[:-1] + 1))
     pos_in_group = np.arange(b.size) - starts_of_group[group]
     contrib = (b.astype(np.uint64) & np.uint64(0x7F)) << (
         pos_in_group.astype(np.uint64) * np.uint64(7)
     )
-    out = np.zeros(n_vals, dtype=np.uint64)
-    np.add.at(out, group, contrib)
+    # every value has >= 1 byte, so no group is empty
+    out = np.add.reduceat(contrib, starts_of_group)
     cum_last = np.concatenate(([0], np.cumsum(is_last)))
     counts = cum_last[ends] - cum_last[ends - lens]
     return out, counts
@@ -218,8 +217,8 @@ def for_encode(values: np.ndarray) -> bytes:
     """Frame-of-Reference: [base u64][width u8][n u32][packed deltas].
 
     Fixed bit-width packing of (value - min). Alternative codec for
-    dense blocks; round-trip tested, selectable via IndexConfig in a
-    future layout version (current postings use varbyte).
+    dense blocks, selected per index by ``IndexConfig.codec`` and
+    recorded in stats.json.
     """
     v = np.asarray(values, dtype=np.uint64)
     if v.size == 0:
@@ -248,3 +247,88 @@ def for_decode(buf: bytes) -> np.ndarray:
     bits = bits[: n * width].reshape(n, width).astype(np.uint64)
     vals = (bits << np.arange(width, dtype=np.uint64)).sum(axis=1, dtype=np.uint64)
     return vals + base
+
+
+def segmented_cumsum(values: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Prefix sums restarted at every segment (segment i = the next
+    ``counts[i]`` values): one global cumsum minus each segment's
+    preceding total. int64 wraparound cancels, so the result is exact
+    whenever each segment's own sums fit in int64."""
+    c = np.cumsum(np.asarray(values, dtype=np.int64))
+    before = np.concatenate(([0], c))[np.cumsum(counts) - counts]
+    return c - np.repeat(before, counts)
+
+
+def encode_blocks(
+    docs: np.ndarray,
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    tf_norm: np.ndarray,
+    block_size: int,
+    codec: str,
+) -> dict:
+    """Encode ONE term's postings (strictly increasing ``docs``) into
+    independently decodable blocks of ``block_size`` — the one writer
+    of the postings block format. Block i holds ``first_doc`` absolute,
+    its ``n - 1`` doc-id gaps in ``doc_bytes`` and its ``n`` tf and doc
+    length values in ``tf_bytes``/``dl_bytes``, each byte column in
+    ``codec``. Returns the postings columns after (term, block_id), by
+    name: first_doc, last_doc, n, the byte columns (lists of bytes) and
+    the block maxima max_tf_norm (of ``tf_norm``), max_tf, min_dl.
+
+    Byte-identical to per-block :func:`delta_encode`/:func:`encode_ints`.
+    VByte encodes every block of every column in one
+    :func:`varbyte_encode_segmented` pass; FOR encodes per block."""
+    docs = np.asarray(docs, dtype=np.int64)
+    tfs, dls = np.asarray(tfs), np.asarray(dls)
+    starts = np.arange(0, docs.size, block_size)
+    ns = np.diff(np.append(starts, docs.size))
+    # a block's gaps: every posting's gap to its predecessor but the first's
+    gaps = np.delete(np.diff(docs), starts[1:] - 1)
+    if gaps.size and gaps.min() <= 0:
+        raise ValueError("ids must be strictly increasing")
+    vals = np.concatenate([a.astype(np.uint64) for a in (gaps, tfs, dls)])
+    counts = np.concatenate([ns - 1, ns, ns])
+    if codec == "varbyte":
+        buf, offs = varbyte_encode_segmented(vals, counts)
+        offs = offs.tolist()
+        chunks = [buf[a:z] for a, z in zip(offs[:-1], offs[1:])]
+    else:
+        chunks = [encode_ints(v, codec) for v in np.split(vals, np.cumsum(counts)[:-1])]
+    nb = ns.size
+    return {
+        "first_doc": docs[starts],
+        "last_doc": docs[starts + ns - 1],
+        "n": ns,
+        "doc_bytes": chunks[:nb],
+        "tf_bytes": chunks[nb : 2 * nb],
+        "dl_bytes": chunks[2 * nb :],
+        "max_tf_norm": np.maximum.reduceat(tf_norm, starts),
+        "max_tf": np.maximum.reduceat(tfs, starts).astype(np.int64),
+        "min_dl": np.minimum.reduceat(dls, starts).astype(np.int64),
+    }
+
+
+def decode_blocks(
+    first_doc, n, doc_bytes, tf_bytes, dl_bytes, codec: str
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Decode a BATCH of postings blocks (the inverse of
+    :func:`encode_blocks`) → ``(docs, tfs, dls, ok)``. ``ok[i]`` says
+    block i's payload counts match ``n[i]`` (n - 1 gaps, n tfs, n dls);
+    the int64 arrays hold the postings of the ok blocks only, in block
+    order. All three byte columns decode in one
+    :func:`decode_ints_many` call, and doc ids come back from first_doc
+    + gaps through one :func:`segmented_cumsum`."""
+    first = np.asarray(first_doc, dtype=np.int64)
+    n = np.asarray(n, dtype=np.int64)
+    vals, counts = decode_ints_many([*doc_bytes, *tf_bytes, *dl_bytes], codec)
+    counts = counts.reshape(3, n.size)
+    ok = (counts[0] == n - 1) & (counts[1] == n) & (counts[2] == n)
+    if not ok.all():
+        vals = vals[np.repeat(np.tile(ok, 3), counts.ravel())]
+        first, n = first[ok], n[ok]
+    total = int(n.sum())
+    gaps, tfs, dls = np.split(vals.astype(np.int64), [total - n.size, 2 * total - n.size])
+    # each block's first_doc goes in front of its n - 1 gaps
+    deltas = np.insert(gaps, np.cumsum(n - 1) - (n - 1), first)
+    return segmented_cumsum(deltas, n), tfs, dls, ok

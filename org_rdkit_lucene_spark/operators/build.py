@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from org_rdkit_lucene_spark.config import IndexConfig
-from org_rdkit_lucene_spark.functions.codecs import delta_encode, encode_ints
+from org_rdkit_lucene_spark.functions.codecs import encode_blocks
 from org_rdkit_lucene_spark.functions.tokenizer import (
     batch_is_ascii,
     tokenize_flat_arrow_ascii,
@@ -486,11 +486,8 @@ def _encode_term_arrays(
     docs: np.ndarray,
     tfs: np.ndarray,
     dls: np.ndarray,
-    block_size: int,
-    k1: float,
-    b: float,
+    cfg: IndexConfig,
     avgdl: float,
-    codec: str = "varbyte",
 ) -> list[tuple]:
     """Chunk one term's full sorted postings into independently-decodable
     blocks. Block-max metadata (``max_tf_norm``) replaces Lucene skip
@@ -498,30 +495,13 @@ def _encode_term_arrays(
     also stored so a *safe* bound can be recomputed under a different
     corpus ``avgdl`` (incremental segments shift global stats; tf_norm
     is increasing in tf and decreasing in dl, so f(max_tf, min_dl)
-    upper-bounds every member for any avgdl)."""
-    rows = []
-    n = len(docs)
+    upper-bounds every member for any avgdl). The block layout is
+    :func:`~..functions.codecs.encode_blocks`'s."""
+    k1, b = cfg.bm25.k1, cfg.bm25.b
     tf_norm = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-    for bi, start in enumerate(range(0, n, block_size)):
-        d = docs[start : start + block_size]
-        first, gap_bytes = delta_encode(d, codec)
-        sl = slice(start, start + block_size)
-        rows.append(
-            (
-                term,
-                bi,
-                first,
-                int(d[-1]),
-                len(d),
-                gap_bytes,
-                encode_ints(tfs[sl].astype(np.uint64), codec),
-                encode_ints(dls[sl].astype(np.uint64), codec),
-                float(tf_norm[sl].max()),
-                int(tfs[sl].max()),
-                int(dls[sl].min()),
-            )
-        )
-    return rows
+    cols = encode_blocks(docs, tfs, dls, tf_norm, cfg.block_size, cfg.codec)
+    nb = len(cols["n"])
+    return list(zip([term] * nb, range(nb), *cols.values()))
 
 
 def _make_cold_encoder_arrow(cfg: IndexConfig, avgdl: float):
@@ -533,7 +513,6 @@ def _make_cold_encoder_arrow(cfg: IndexConfig, avgdl: float):
     exactly once from its full list."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    bs, k1, b, codec = cfg.block_size, cfg.bm25.k1, cfg.bm25.b, cfg.codec
     # resolved on the driver: DDL parsing needs the JVM
     schema = to_arrow_schema(StructType.fromDDL(POSTINGS_SCHEMA))
 
@@ -566,28 +545,16 @@ def _make_cold_encoder_arrow(cfg: IndexConfig, avgdl: float):
             out_rows: list[tuple] = []
             for s, e in zip(starts, ends):
                 term = dictv[idx[s]].as_py()
-                d, t, l = docs[s:e], tfs[s:e], dls[s:e]
-                if carry is not None:
-                    if carry[0] == term:
-                        d = np.concatenate([carry[1], d])
-                        t = np.concatenate([carry[2], t])
-                        l = np.concatenate([carry[3], l])
-                    else:
-                        out_rows.extend(
-                            _encode_term_arrays(carry[0], carry[1], carry[2], carry[3],
-                                                bs, k1, b, avgdl, codec)
-                        )
-                    carry = None
-                if e == len(idx):
-                    carry = (term, d, t, l)
-                else:
-                    out_rows.extend(_encode_term_arrays(term, d, t, l, bs, k1, b, avgdl, codec))
+                run = (docs[s:e], tfs[s:e], dls[s:e])
+                if carry is not None and carry[0] == term:
+                    run = tuple(np.concatenate(p) for p in zip(carry[1:], run))
+                elif carry is not None:
+                    out_rows.extend(_encode_term_arrays(*carry, cfg, avgdl))
+                carry = (term, *run)
             if out_rows:
                 yield _rows_to_rb(out_rows)
         if carry is not None:
-            yield _rows_to_rb(
-                _encode_term_arrays(carry[0], carry[1], carry[2], carry[3], bs, k1, b, avgdl, codec)
-            )
+            yield _rows_to_rb(_encode_term_arrays(*carry, cfg, avgdl))
 
     return encode
 
@@ -616,7 +583,6 @@ def _make_hot_encoder(cfg: IndexConfig, avgdl: float):
     """applyInPandas phase 2 for hot terms: concatenate per-salt runs in
     salt order (salts are doc_id ranges ⇒ concatenation is globally
     sorted) and block-encode — byte-identical to an unsalted build."""
-    bs, k1, b, codec = cfg.block_size, cfg.bm25.k1, cfg.bm25.b, cfg.codec
     cols = StructType.fromDDL(POSTINGS_SCHEMA).names
 
     def merge_runs(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -624,7 +590,7 @@ def _make_hot_encoder(cfg: IndexConfig, avgdl: float):
         docs = np.concatenate([np.frombuffer(x, dtype=np.int64) for x in pdf["docs_raw"]])
         tfs = np.concatenate([np.frombuffer(x, dtype=np.int32) for x in pdf["tfs_raw"]]).astype(np.float64)
         dls = np.concatenate([np.frombuffer(x, dtype=np.int32) for x in pdf["dls_raw"]]).astype(np.float64)
-        rows = _encode_term_arrays(pdf["term"].iloc[0], docs, tfs, dls, bs, k1, b, avgdl, codec)
+        rows = _encode_term_arrays(pdf["term"].iloc[0], docs, tfs, dls, cfg, avgdl)
         return pd.DataFrame(rows, columns=cols)
 
     return merge_runs

@@ -23,51 +23,41 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from org_rdkit_lucene_spark.functions.codecs import decode_ints_many
+from org_rdkit_lucene_spark.functions.codecs import decode_blocks
 from org_rdkit_lucene_spark.operators.build import read_table
 
 
 def _deep_kernel(codec: str):
+    """Per block: decoded Σtf and whether its payload counts match n;
+    per batch: doc ids strictly increase inside every block and end at
+    its ``last_doc`` (blocks whose counts fail are judged by that flag
+    alone)."""
+
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            n_per = pdf["n"].to_numpy(np.int64)
-            gaps, gap_counts = decode_ints_many(
-                [bytes(x) for x in pdf["doc_bytes"]], codec
+            docs, tfs, _, ok = decode_blocks(
+                pdf["first_doc"], pdf["n"], pdf["doc_bytes"], pdf["tf_bytes"],
+                pdf["dl_bytes"], codec,
             )
-            tfs, tf_counts = decode_ints_many(
-                [bytes(x) for x in pdf["tf_bytes"]], codec
-            )
-            counts_ok = bool(
-                (gap_counts == n_per - 1).all() and (tf_counts == n_per).all()
-            )
-            # gaps strictly positive <=> doc ids strictly increasing
-            monotonic_ok = bool((gaps > 0).all()) if gaps.size else True
-            # last_doc envelope: first + sum(gaps per block) == last_doc
-            bnd = np.concatenate(([0], np.cumsum(gap_counts)))
-            csum = np.concatenate(([0], np.cumsum(gaps.astype(np.int64))))
-            spans = csum[bnd[1:]] - csum[bnd[:-1]]
-            range_ok = bool(
-                (
-                    pdf["first_doc"].to_numpy(np.int64) + spans
-                    == pdf["last_doc"].to_numpy(np.int64)
-                ).all()
-            )
-            # per-term decoded tf sums (cf reconstruction)
-            tf_bnd = np.concatenate(([0], np.cumsum(tf_counts)))
-            tf_csum = np.concatenate(([0], np.cumsum(tfs.astype(np.int64))))
-            block_tf = tf_csum[tf_bnd[1:]] - tf_csum[tf_bnd[:-1]]
-            out = pd.DataFrame(
+            n = pdf["n"].to_numpy(np.int64)[ok]
+            ends = np.cumsum(n)
+            rising = np.diff(docs) > 0
+            rising[ends[:-1] - 1] = True  # steps across a block boundary
+            block_tf = np.zeros(len(pdf), dtype=np.int64)
+            block_tf[ok] = np.add.reduceat(tfs, ends - n)
+            yield pd.DataFrame(
                 {
                     "term": pdf["term"],
                     "block_tf": block_tf,
-                    "counts_ok": counts_ok,
-                    "monotonic_ok": monotonic_ok,
-                    "range_ok": range_ok,
+                    "counts_ok": ok,
+                    "monotonic_ok": bool(rising.all()),
+                    "range_ok": bool(
+                        (docs[ends - 1] == pdf["last_doc"].to_numpy(np.int64)[ok]).all()
+                    ),
                 }
             )
-            yield out
 
     return kernel
 
@@ -88,8 +78,8 @@ def check_index(index, deep: bool = False) -> pd.DataFrame:
       next first_doc in block_id order); first_doc <= last_doc, n >= 1
     - idf reproduces ln(1 + (N - df + .5)/(df + .5)) bit-for-bit
 
-    ``deep=True`` adds the decode pass: per-block gap/tf payload counts
-    match n, doc ids strictly increase into exactly [first_doc,
+    ``deep=True`` adds the decode pass: per-block gap/tf/dl payload
+    counts match n, doc ids strictly increase into exactly [first_doc,
     last_doc], and per-term decoded Σtf == lexicon cf.
     """
     rows: list[tuple[str, bool, str]] = []
@@ -168,7 +158,7 @@ def check_index(index, deep: bool = False) -> pd.DataFrame:
     if deep:
         codec = getattr(index, "codec", "varbyte")
         dec = index.postings.select(
-            "term", "n", "first_doc", "last_doc", "doc_bytes", "tf_bytes"
+            "term", "n", "first_doc", "last_doc", "doc_bytes", "tf_bytes", "dl_bytes"
         ).mapInPandas(
             _deep_kernel(codec),
             schema="term string, block_tf long, counts_ok boolean, "

@@ -96,8 +96,8 @@ def vb_encode_positions(ps_sorted, counts):
 def vb_decode_fn():
     """mapInArrow decoder: (term, doc_id, poss_vb) batches -> packed
     (term, doc_id, poss) batches. One vectorized VByte pass per batch
-    (:func:`codecs.varbyte_decode_many`) + segmented cumsum to undo the
-    per-list deltas + zero-copy ListArray assembly. Order-preserving,
+    (:func:`codecs.varbyte_decode_many`) + :func:`codecs.segmented_cumsum`
+    to undo the per-list deltas + zero-copy ListArray assembly. Order-preserving,
     so an upstream term-clustering sort survives to the parquet row
     groups — this is why writers shuffle the COMPACT vb rows and decode
     after the sort (~6x fewer shuffle bytes than array<long> rows)."""
@@ -108,6 +108,7 @@ def vb_decode_fn():
         import pyarrow.compute as pc
 
         from org_rdkit_lucene_spark.functions.codecs import (
+            segmented_cumsum,
             varbyte_decode_many,
         )
 
@@ -124,17 +125,9 @@ def vb_decode_fn():
             names = rb.schema.names
             vb = rb.column(names.index("poss_vb"))
             deltas, counts = varbyte_decode_many(vb.to_pylist())
-            n = len(counts)
-            offsets = np.zeros(n + 1, dtype=np.int64)
+            offsets = np.zeros(len(counts) + 1, dtype=np.int64)
             np.cumsum(counts, out=offsets[1:])
-            if deltas.size:
-                d = deltas.astype(np.int64)
-                csum = np.cumsum(d)
-                seg_starts = offsets[:-1]
-                base = csum[seg_starts] - d[seg_starts]
-                absv = csum - np.repeat(base, counts)
-            else:
-                absv = np.empty(0, dtype=np.int64)
+            absv = segmented_cumsum(deltas, counts)
             la = pa.LargeListArray.from_arrays(
                 offsets, pa.array(absv, type=pa.int64())
             )

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from org_rdkit_lucene_spark.config import candidate_cap
-from org_rdkit_lucene_spark.functions.codecs import decode_ints, delta_decode
+from org_rdkit_lucene_spark.functions.codecs import decode_blocks
 from org_rdkit_lucene_spark.functions.tokenizer import tokenize_text
 from org_rdkit_lucene_spark.operators.build import InvertedIndex, driver_df, empty_df
 
@@ -66,36 +66,34 @@ def _make_decode_blocks(
 
     With ``term_ids`` (a driver-side term → int32 map over the query's
     term set), the kernel emits a ``tid`` int column instead of a
-    string: one dict lookup per BLOCK, ``np.full`` per posting — the
-    hot scoring stream then never materializes per-row Python/Arrow
-    strings and the weight join keys on ints."""
+    string: one map lookup per BLOCK, repeated per posting — the hot
+    scoring stream then never materializes per-row Python/Arrow strings
+    and the weight join keys on ints. Each batch decodes in one
+    :func:`~..functions.codecs.decode_blocks` call."""
 
     def _decode_blocks(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            docs_l, tfs_l, dls_l, terms_l = [], [], [], []
-            for term, first, n, db, tb, lb in zip(
-                pdf["term"], pdf["first_doc"], pdf["n"], pdf["doc_bytes"],
-                pdf["tf_bytes"], pdf["dl_bytes"],
-            ):
-                docs_l.append(delta_decode(int(first), bytes(db), int(n), codec))
-                tfs_l.append(decode_ints(bytes(tb), codec).astype(np.int32))
-                dls_l.append(decode_ints(bytes(lb), codec).astype(np.int32))
-                if term_ids is None:
-                    terms_l.append(np.repeat(np.asarray([term], dtype=object), int(n)))
-                else:
-                    terms_l.append(np.full(int(n), term_ids[term], dtype=np.int32))
+            docs, tfs, dls, ok = decode_blocks(
+                pdf["first_doc"], pdf["n"], pdf["doc_bytes"], pdf["tf_bytes"],
+                pdf["dl_bytes"], codec,
+            )
+            if not ok.all():
+                raise ValueError("postings block payload counts disagree with n")
+            n = pdf["n"].to_numpy(np.int64)
+            if term_ids is None:
+                key, terms = "term", pdf["term"].to_numpy(object)
+            else:
+                key, terms = "tid", pdf["term"].map(term_ids).to_numpy(np.int32)
             out = {
-                ("term" if term_ids is None else "tid"): np.concatenate(terms_l),
-                "doc_id": np.concatenate(docs_l),
-                "tf": np.concatenate(tfs_l),
-                "dl": np.concatenate(dls_l),
+                key: np.repeat(terms, n),
+                "doc_id": docs,
+                "tf": tfs.astype(np.int32),
+                "dl": dls.astype(np.int32),
             }
             if kill is not None:
-                ords = np.repeat(
-                    pdf["seg_ord"].to_numpy(np.int64), pdf["n"].to_numpy(np.int64)
-                )
+                ords = np.repeat(pdf["seg_ord"].to_numpy(np.int64), n)
                 keep = ~dead_versions(kill, out["doc_id"], ords)
                 out = {c: v[keep] for c, v in out.items()}
             yield pd.DataFrame(out)
@@ -432,6 +430,36 @@ def search(
     )
 
 
+def _after_cursor(
+    scored: DataFrame, after: dict[int, tuple[int, object]], key: str
+) -> DataFrame:
+    """The ONE DataFrame keyset predicate (searchAfter, K5 —
+    ``SubstructureScoreDocCollector.java:97-160``): keep only rows
+    strictly after their query's cursor ``after[query_id] = (score_q,
+    key value)`` in (score_q DESC, ``key`` ASC NULLS LAST) order. A
+    NULL key follows every non-NULL cursor on a score tie and nothing
+    follows a NULL cursor; queries without a cursor keep every row.
+    ``key`` is ``doc_id`` (long) or a block-join ``parent`` (string)."""
+    ktype = scored.schema[key].dataType.simpleString()
+    cur = F.broadcast(
+        driver_df(
+            scored.sparkSession,
+            [(int(q), int(sq), kv) for q, (sq, kv) in after.items()],
+            f"query_id int, after_score_q long, after_key {ktype}",
+        )
+    )
+    c, ck, cs = F.col(key), F.col("after_key"), F.col("after_score_q")
+    return (
+        scored.join(cur, "query_id", "left")
+        .filter(
+            cs.isNull()
+            | (F.col("score_q") < cs)
+            | ((F.col("score_q") == cs) & ((c > ck) | (c.isNull() & ck.isNotNull())))
+        )
+        .drop("after_score_q", "after_key")
+    )
+
+
 def search_after(
     index: InvertedIndex,
     queries: list[tuple[int, str, int]],
@@ -449,17 +477,7 @@ def search_after(
     scored = _match_mode(scored, mode)
     dec = index.cfg.bm25.score_decimals
     scored = scored.withColumn("score_q", _quantize(F.col("score_raw"), dec))
-    aft = F.broadcast(
-        driver_df(
-            spark, [(qid, sq, did) for qid, (sq, did) in after.items()],
-            "query_id int, after_score_q long, after_doc_id long",
-        )
-    )
-    scored = scored.join(aft, "query_id", "left").filter(
-        F.col("after_score_q").isNull()
-        | (F.col("score_q") < F.col("after_score_q"))
-        | ((F.col("score_q") == F.col("after_score_q")) & (F.col("doc_id") > F.col("after_doc_id")))
-    )
+    scored = _after_cursor(scored, after, "doc_id")
     return _two_stage_rank(
         scored,
         "k",
@@ -2013,18 +2031,7 @@ def search_syntax(
         # SubstructureScoreDocCollector.java:97-160): drop hits at or
         # above the cursor in the K2 order before ranking. A pure
         # filter, so every candidate bound stays valid.
-        aft = F.broadcast(
-            driver_df(
-                spark, [(qid, sq, did) for qid, (sq, did) in after.items()],
-                "query_id int, after_score_q long, after_doc_id long",
-            )
-        )
-        quant = quant.join(aft, "query_id", "left").filter(
-            F.col("after_score_q").isNull()
-            | (F.col("score_q") < F.col("after_score_q"))
-            | ((F.col("score_q") == F.col("after_score_q"))
-               & (F.col("doc_id") > F.col("after_doc_id")))
-        ).drop("after_score_q", "after_doc_id")
+        quant = _after_cursor(quant, after, "doc_id")
     return _two_stage_rank(
         quant, "k_final", est_candidates=est_disj,
         max_k=max(k for _, _, k in queries),
@@ -3066,34 +3073,7 @@ def search_block_join(
         F.max("k").alias("k"),
     )
     if after:
-        cur = F.broadcast(
-            driver_df(
-                index.spark,
-                [
-                    (int(q), int(s), None if p is None else str(p))
-                    for q, (s, p) in after.items()
-                ],
-                "query_id int, cs long, cp string",
-            )
-        )
-        # strictly after (cs, cp) in (score_q DESC, parent ASC NULLS
-        # LAST): on a score tie a NULL parent follows every non-NULL
-        # cursor, and nothing follows a NULL cursor
-        parents = (
-            parents.join(cur, "query_id", "left")
-            .filter(
-                F.col("cs").isNull()
-                | (F.col("score_q") < F.col("cs"))
-                | (
-                    (F.col("score_q") == F.col("cs"))
-                    & (
-                        (F.col("parent") > F.col("cp"))
-                        | (F.col("parent").isNull() & F.col("cp").isNotNull())
-                    )
-                )
-            )
-            .drop("cs", "cp")
-        )
+        parents = _after_cursor(parents, after, "parent")
     # NULLS LAST matches DuckDB's ASC default — a NULL parent (NULL
     # join field in docmeta) would otherwise rank FIRST engine-side on
     # score ties while the twin ranks it last

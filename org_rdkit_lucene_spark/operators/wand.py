@@ -48,7 +48,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from org_rdkit_lucene_spark.functions.codecs import decode_ints_many
+from org_rdkit_lucene_spark.functions.codecs import decode_blocks
 from org_rdkit_lucene_spark.operators.build import InvertedIndex, empty_df
 from org_rdkit_lucene_spark.operators.query import (
     RESULT_SCHEMA,
@@ -152,12 +152,10 @@ def _make_kernel(
 
         def ensure_decoded(bis: np.ndarray) -> None:
             """Decode every not-yet-decoded block of a sweep batch in
-            ONE vectorized pass (decode_ints_many + segmented cumsum
-            for the doc-gap prefix sums) — per-block decode calls were
-            the kernel's dominant cost (~45µs numpy fixed overhead +
-            pandas row access × 10⁵ blocks). Bit-identical to the
-            per-block path; kill filtering rides the same flat
-            arrays."""
+            ONE :func:`~..functions.codecs.decode_blocks` call —
+            per-block decode calls were the kernel's dominant cost
+            (~45µs numpy fixed overhead + pandas row access × 10⁵
+            blocks). Kill filtering rides the same flat arrays."""
             to_decode = []
             for bi in bis:
                 bi = int(bi)
@@ -173,31 +171,13 @@ def _make_kernel(
                 return
             idx = np.asarray(to_decode, dtype=np.int64)
             n_per = ns_arr[idx]
-            gaps, gap_counts = decode_ints_many(
-                [bytes(doc_bytes_arr[bi]) for bi in to_decode], codec
+            docs_all, tfs, dls, ok = decode_blocks(
+                firsts[idx], n_per, doc_bytes_arr[idx], tf_bytes_arr[idx],
+                dl_bytes_arr[idx], codec,
             )
-            if not (gap_counts == n_per - 1).all():
-                raise ValueError("gap count mismatch in block decode")
-            total = int(n_per.sum())
-            starts = np.concatenate(([0], np.cumsum(n_per)[:-1]))
-            flat = np.empty(total, dtype=np.int64)
-            flat[starts] = firsts[idx]
-            mask = np.ones(total, dtype=bool)
-            mask[starts] = False
-            flat[mask] = gaps.astype(np.int64)
-            # segmented cumsum: within-block prefix sums off one global
-            c = np.cumsum(flat)
-            docs_all = c - np.repeat(c[starts] - flat[starts], n_per)
-            tf_all, tf_counts = decode_ints_many(
-                [bytes(tf_bytes_arr[bi]) for bi in to_decode], codec
-            )
-            dl_all, dl_counts = decode_ints_many(
-                [bytes(dl_bytes_arr[bi]) for bi in to_decode], codec
-            )
-            if not ((tf_counts == n_per).all() and (dl_counts == n_per).all()):
-                raise ValueError("tf/dl count mismatch in block decode")
-            tfs = tf_all.astype(np.float64)
-            dls = dl_all.astype(np.float64)
+            if not ok.all():
+                raise ValueError("postings block payload counts disagree with n")
+            tfs, dls = tfs.astype(np.float64), dls.astype(np.float64)
             n_kept = n_per
             if kill is not None:
                 # drop tombstoned versions (one kill law, shared with

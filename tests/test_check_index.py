@@ -65,6 +65,54 @@ def test_empty_index_reports_instead_of_crashing(spark, small_index, tmp_path):
     assert not bool(out.loc["doc_count", "passed"])
 
 
+def _tamper_block_count(index_dir, profile):
+    """Rewrite one postings row's n to n + 1 with pyarrow (its bytes
+    unchanged); returns the row's term, chosen so a query for it
+    analyzes to that same term."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from org_rdkit_lucene_spark.functions.tokenizer import tokenize_text
+
+    for f in sorted(glob.glob(os.path.join(index_dir, "postings.parquet", "*.parquet"))):
+        t = pq.read_table(f)
+        for i, term in enumerate(t.column("term").to_pylist()):
+            if tokenize_text(term, profile) != [term]:
+                continue
+            n = t.column("n").to_numpy().copy()
+            n[i] += 1
+            j = t.schema.get_field_index("n")
+            pq.write_table(t.set_column(j, t.schema.field(j), pa.array(n)), f)
+            crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+            if os.path.exists(crc):
+                os.remove(crc)  # the rewritten file no longer matches it
+            return term
+    raise AssertionError("no postings row to tamper")
+
+
+def test_tampered_block_count_detected(spark, small_index, tmp_path):
+    """A postings block whose n disagrees with its payload: the deep
+    CheckIndex pass reports it (and keeps judging the other blocks)
+    instead of raising, while both query paths refuse to score it."""
+    from org_rdkit_lucene_spark.operators.query import search
+    from org_rdkit_lucene_spark.operators.wand import search_wand
+
+    d = str(tmp_path / "tampered_block")
+    shutil.copytree(small_index.index_dir, d)
+    idx = InvertedIndex.load(spark, d)
+    term = _tamper_block_count(d, idx.cfg.tokenizer)
+    out = check_index(idx, deep=True).set_index("check")  # must not raise
+    assert not out.loc["deep_payload_counts", "passed"]
+    assert not out.loc["df_matches_blocks", "passed"]
+    assert out.loc["deep_docs_monotonic", "passed"]
+    assert out.loc["deep_block_ranges", "passed"]
+    for run in (search, search_wand):
+        with pytest.raises(Exception, match="ValueError: postings block payload counts"):
+            run(idx, [(1, term, 10**6)]).collect()
+
+
 def test_check_segmented_green_and_detects_tamper(spark, tmp_path):
     """CheckIndex over a segmented view: base pass + per-segment blocks
     + merged invariants (stat arithmetic, one-live-version, tombstone

@@ -146,3 +146,81 @@ def test_vb_positions_roundtrip_law():
     (out,) = list(vb_decode_fn()([rb]))
     got = out.column(2).to_pylist()
     assert got == [x.tolist() for x in lists]
+
+
+def _reference_blocks(docs, tfs, dls, block_size, codec):
+    """Per-block encode with the single-block reference functions."""
+    from org_rdkit_lucene_spark.functions.codecs import encode_ints
+
+    out = []
+    for s in range(0, len(docs), block_size):
+        d = docs[s : s + block_size]
+        first, gap_bytes = delta_encode(d, codec)
+        out.append((
+            first, int(d[-1]), len(d), gap_bytes,
+            encode_ints(tfs[s : s + block_size].astype(np.uint64), codec),
+            encode_ints(dls[s : s + block_size].astype(np.uint64), codec),
+        ))
+    return out
+
+
+def test_block_codec_parity():
+    """encode_blocks is byte-identical to per-block delta_encode/
+    encode_ints, and decode_blocks(encode_blocks(...)) equals the
+    per-block delta_decode/decode_ints, for both codecs: n = 1 blocks,
+    a term of exactly block_size postings, multi-byte gaps near 2^62
+    and the empty batch."""
+    from org_rdkit_lucene_spark.functions.codecs import (
+        decode_blocks,
+        decode_ints,
+        encode_blocks,
+    )
+
+    rng = np.random.default_rng(3)
+    bs = 16
+    terms = [np.array([7]), np.arange(bs) * 3, np.array([0, 2**62 - 9, 2**62])]
+    terms += [np.sort(rng.choice(10**9, df, replace=False)) for df in (1, 2, 17, 33, 200)]
+    for codec in ("varbyte", "for"):
+        batch = []
+        for docs in terms:
+            docs = docs.astype(np.int64)
+            tfs = rng.integers(1, 300, docs.size).astype(np.float64)
+            dls = rng.integers(1, 10**6, docs.size).astype(np.float64)
+            cols = encode_blocks(docs, tfs, dls, tfs / dls, bs, codec)
+            ref = _reference_blocks(docs, tfs, dls, bs, codec)
+            names = ("first_doc", "last_doc", "n", "doc_bytes", "tf_bytes", "dl_bytes")
+            assert list(zip(*(cols[c] for c in names))) == ref
+            for i, s in enumerate(range(0, docs.size, bs)):
+                assert cols["max_tf"][i] == tfs[s : s + bs].max()
+                assert cols["min_dl"][i] == dls[s : s + bs].min()
+                assert cols["max_tf_norm"][i] == (tfs / dls)[s : s + bs].max()
+            batch += ref
+        got_docs, got_tfs, got_dls, ok = decode_blocks(*zip(*[
+            (f, n, db, tb, lb) for f, _, n, db, tb, lb in batch
+        ]), codec)
+        assert ok.all() and ok.size == len(batch)
+        assert (got_docs == np.concatenate(
+            [delta_decode(f, db, n, codec) for f, _, n, db, _, _ in batch])).all()
+        assert (got_tfs == np.concatenate([decode_ints(r[4], codec) for r in batch])).all()
+        assert (got_dls == np.concatenate([decode_ints(r[5], codec) for r in batch])).all()
+        empty = decode_blocks([], [], [], [], [], codec)
+        assert [a.size for a in empty] == [0, 0, 0, 0]
+
+
+def test_decode_blocks_flags_count_mismatch():
+    """A block whose n disagrees with its bytes gets ok = False and its
+    postings are left out; the other blocks decode unchanged."""
+    from org_rdkit_lucene_spark.functions.codecs import decode_blocks, encode_blocks
+
+    for codec in ("varbyte", "for"):
+        docs = np.arange(0, 40, 2, dtype=np.int64)
+        ones = np.ones(docs.size)
+        cols = encode_blocks(docs, ones, ones, ones, 8, codec)
+        n = cols["n"].copy()
+        n[1] += 1
+        got, _, _, ok = decode_blocks(
+            cols["first_doc"], n, cols["doc_bytes"], cols["tf_bytes"],
+            cols["dl_bytes"], codec,
+        )
+        assert ok.tolist() == [True, False, True]
+        assert (got == np.concatenate([docs[:8], docs[16:]])).all()
