@@ -823,7 +823,13 @@ def analyze_phrase_slots(
     stable plan. Returns None when any slot analyzes empty — the
     zero-token-phrase inert law (``parse_query``'s phrase law;
     Lucene's MultiPhraseQuery.add would throw instead, but the query
-    surface here is text-typed)."""
+    surface here is text-typed).
+
+    ``profile`` must be the analyzer the positions artifact was built
+    with. ``None`` assumes DEFAULT_PROFILE, the default build's: an
+    artifact built under another profile needs its profile passed here
+    (and to :func:`search_multi_phrase`), or the query's slot tokens
+    and the indexed tokens follow different laws."""
     from org_rdkit_lucene_spark.functions.tokenizer import DEFAULT_PROFILE
 
     prof = profile or DEFAULT_PROFILE
@@ -856,7 +862,9 @@ def search_multi_phrase(
     DISTINCT). Ranking is the indexed-phrase integer law (n_occ DESC,
     doc_id ASC, row_number ≤ k) with the search_phrase_positions
     output schema. Singleton slots collapse the operator to the exact
-    PhraseQuery — identity-tested.
+    PhraseQuery — identity-tested. ``profile``: the analyzer the
+    artifact was built with (None = DEFAULT_PROFILE, see
+    :func:`analyze_phrase_slots`).
 
     Plan (whole batch, not per query): the exact per-term census
     routes queries exactly like :func:`_phrase_occurrences` — a slot

@@ -335,13 +335,16 @@ ORDER BY 1, 2"""
 def percolate_syntax_sql(
     queries: list[tuple[int, str, int]],
     table: str = "documents",
+    profile: TokenizerProfile = DEFAULT_PROFILE,
 ) -> str:
     """Twin of ``streaming.percolate.percolate_syntax`` over the
     index's own corpus: weights from the SHARED
     ``syntax_scoring_weights`` law (must-pinning, boost sums), MUST
     coverage via a distinct-count join, MUST_NOT via NOT EXISTS over
     the token stream; scored set == the forward ``search_syntax``
-    term law with frozen idf/avgdl = the same table's stats."""
+    term law with frozen idf/avgdl = the same table's stats.
+    ``profile``: the index's analyzer (``cfg.tokenizer``), used for the
+    query terms and the token stream alike."""
     from org_rdkit_lucene_spark.operators.query import (
         parse_query,
         syntax_scoring_weights,
@@ -366,7 +369,7 @@ def percolate_syntax_sql(
                 f"percolate_syntax supports term clauses only; query "
                 f"{qid} uses {bad}"
             )
-        counts, must = syntax_scoring_weights(p, DEFAULT_PROFILE)
+        counts, must = syntax_scoring_weights(p, profile)
         if not counts:
             continue
         for term, w in sorted(counts.items()):
@@ -375,7 +378,7 @@ def percolate_syntax_sql(
             must_rows.append(f"({qid}, '{_q(t)}')")
         need_rows.append(f"({qid}, {len(must)})")
         excl = sorted(
-            {t for w in p["excluded"] for t in tokenize_text(w)}
+            {t for w in p["excluded"] for t in tokenize_text(w, profile)}
         )
         for t in excl:
             excl_rows.append(f"({qid}, '{_q(t)}')")
@@ -388,7 +391,7 @@ def percolate_syntax_sql(
         empty = "(" + ", ".join(f"CAST(NULL AS {t})" for t in types) + ")"
         return ",\n    ".join(rows) if rows else empty
 
-    toks = duckdb_tokens_sql("text")
+    toks = duckdb_tokens_sql("text", profile)
     return f"""
 WITH tok AS (
   SELECT doc_id, unnest({toks}) AS term FROM {table}
@@ -2874,6 +2877,7 @@ def multi_phrase_sql(
     queries: list[tuple[int, list[list[str]], int]],
     table: str = "documents",
     extra_cte: str = "",
+    profile: TokenizerProfile = DEFAULT_PROFILE,
 ) -> str:
     """Twin of positions.search_multi_phrase (indexed MultiPhraseQuery,
     the phrase-with-alternatives law): slots analyzed by the SHARED
@@ -2882,10 +2886,12 @@ def multi_phrase_sql(
     per slot, plain ``count(*)`` occurrence counts (a token-stream
     position holds exactly one term, so slot alternatives cannot
     double-count a start — no DISTINCT needed), rank by
-    (n_occ DESC, doc_id ASC) bounded by k."""
+    (n_occ DESC, doc_id ASC) bounded by k. ``profile``: the analyzer
+    the engine's positions artifact was built with (slots and token
+    stream alike)."""
     from org_rdkit_lucene_spark.operators.positions import analyze_phrase_slots
 
-    toks = duckdb_tokens_sql("text")
+    toks = duckdb_tokens_sql("text", profile)
 
     def _q(s: str) -> str:
         return s.replace("'", "''")
@@ -2895,7 +2901,7 @@ def multi_phrase_sql(
 
     blocks = []
     for qid, slots, k in queries:
-        analyzed = analyze_phrase_slots(slots)
+        analyzed = analyze_phrase_slots(slots, profile)
         if analyzed is None:
             continue  # inert slot -> the query emits no rows
         joins = " ".join(

@@ -80,7 +80,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -219,19 +219,16 @@ def build_segment(
     parquet outputs first, ``stats.json`` last (a segment without
     stats is ignored by :func:`list_segments`).
     """
-    from pyspark.sql import Window
-
     n_parts = max(1, min(cfg.build_partitions, 8))
     base_dir = base_index_dir or os.path.dirname(os.path.dirname(seg_dir))
     with write_lock(base_dir):
         return _build_segment_locked(
-            spark, batch, seg_dir, cfg, id_col, base_dir, with_positions,
-            Window, n_parts,
+            spark, batch, seg_dir, cfg, id_col, base_dir, with_positions, n_parts
         )
 
 
 def _build_segment_locked(
-    spark, batch, seg_dir, cfg, id_col, base_dir, with_positions, Window, n_parts
+    spark, batch, seg_dir, cfg, id_col, base_dir, with_positions, n_parts
 ):
     """Body of :func:`build_segment`, run under the index write lock
     (two writers reading the same prior view would assign colliding
@@ -257,15 +254,17 @@ def _build_segment_locked(
             ),
         ).select("doc_id", "repo", "path", "commit", "lang", "content").persist()
         # persisted: the id-resolution join + window would otherwise
-        # recompute for every downstream consumer (flat, stats, docmeta)
-        pk_expr = F.concat_ws("\x1f", "repo", "path", "commit")
+        # recompute for every downstream consumer (flat, docmeta, deletes)
+        key = ["repo", "path", "commit"]
     else:
         ids = batch.select(
             F.col(id_col).cast("long").alias("doc_id"),
             "repo", "path", "commit", "lang", "content",
         )
-        pk_expr = F.col("doc_id").cast("string")
-    # micro-batches are small: one SPIMI pass, one term-sorted encode
+        key = ["doc_id"]
+    # micro-batches are small: one SPIMI pass, one term-sorted encode.
+    # Cached term-partitioned: the lexicon aggregate and the postings
+    # encode below both read it without a shuffle of their own
     flat = (
         ids.select("doc_id", "content", F.lit(0).cast("int").alias("build_part"))
         .repartition(n_parts)
@@ -274,58 +273,58 @@ def _build_segment_locked(
             schema="doc_id long, term string, tf int, dl int, build_part int",
         )
         .drop("build_part")
+        .repartition(n_parts, "term")
         .persist()
     )
-    stats_row = ids.join(
-        flat.groupBy("doc_id").agg(F.first("dl").alias("doc_len")), "doc_id", "left"
-    ).agg(
-        F.count("*").alias("n"),
-        F.least(
-            F.countDistinct("doc_id"), F.countDistinct(pk_expr)
-        ).alias("n_distinct"),
-        F.sum(F.coalesce(F.col("doc_len"), F.lit(0))).alias("total_dl"),
-        F.max("doc_id").alias("max_id"),
-    ).collect()[0]
-    n, total_dl = int(stats_row["n"]), int(stats_row["total_dl"] or 0)
-    # a duplicated id/key within one batch silently inflates df and
-    # emits duplicate doc_ids in results — the streaming analog of the
-    # batch build's validate_pk (ids overlapping EARLIER segments/base
-    # are fine: that's an upsert, handled by the tombstone below).
-    # With natural keys, two NEW rows sharing a key would get distinct
-    # fresh doc_ids, so the key column itself is checked too.
-    if int(stats_row["n_distinct"]) != n:
+    # segment stats without a job of their own: n/total_dl/max_id ride
+    # an Observation on the docmeta write (as in the base build's
+    # docmeta stage), and so does the batch-uniqueness check. A duplicated
+    # id/key within one batch silently inflates df and emits duplicate
+    # doc_ids in results — the streaming analog of the batch build's
+    # validate_pk (ids overlapping EARLIER segments/base are fine:
+    # that's an upsert, handled by the tombstone below). With natural
+    # keys, two NEW rows sharing a key would get distinct fresh
+    # doc_ids, so the key itself is checked. Observations cannot hold
+    # DISTINCT, so the check is the max of a per-key count window. The
+    # per-doc lengths join as a shuffle hash join (a broadcast would be
+    # a job of its own), so a window by doc_id reuses its exchange.
+    obs = Observation("segment_stats")
+    doc_len = flat.groupBy("doc_id").agg(F.first("dl").alias("doc_len"))
+    docmeta = (
+        ids.join(doc_len.hint("shuffle_hash"), "doc_id", "left")
+        .withColumn("doc_len", F.coalesce(F.col("doc_len"), F.lit(0)))
+        .withColumn("copies", F.count(F.lit(1)).over(Window.partitionBy(*key)))
+        .observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.sum("doc_len").alias("total_dl"),
+            F.max("doc_id").alias("max_id"),
+            F.max("copies").alias("copies"),
+        )
+        .select(
+            "doc_id", "repo", "path", "commit", "lang",
+            F.sha2(F.col("content"), 256).alias("sha256"), "doc_len",
+        )
+    )
+    docmeta.write.mode("overwrite").parquet(os.path.join(seg_dir, "docmeta.parquet"))
+    st = obs.get
+    n, total_dl = int(st["n"]), int(st["total_dl"] or 0)
+    if (st["copies"] or 0) > 1:
+        # stats.json is never written: list_segments ignores this dir
+        flat.unpersist()
+        ids.unpersist()
         raise ValueError(
-            f"batch ids not unique: {n} rows, {int(stats_row['n_distinct'])} "
-            f"distinct {id_col or '(repo, path, commit)'}"
+            f"batch ids not unique: {n} rows, one {id_col or '(repo, path, commit)'} "
+            f"occurs {st['copies']} times"
         )
     seg_avgdl = (total_dl / n) if n else 1.0
 
     # delete-then-add: batch ids already live in the prior view are
-    # tombstoned; their (count, Σ doc_len) is recorded so the merged
-    # stats arithmetic stays integer-exact. One metadata-scale semi-
-    # join per batch (docmeta, not postings).
-    deld = (
-        prior.docmeta.join(F.broadcast(ids.select("doc_id")), "doc_id", "left_semi")
-        .select("doc_id", "doc_len")
-        .persist()
+    # tombstoned. One metadata-scale semi-join per batch (docmeta, not
+    # postings).
+    del_n, del_dl = _write_tombstones(
+        prior, F.broadcast(ids.select("doc_id")), seg_dir
     )
-    drow = deld.agg(
-        F.count("*").alias("dn"), F.sum("doc_len").alias("ddl")
-    ).collect()[0]
-    del_n, del_dl = int(drow["dn"]), int(drow["ddl"] or 0)
-    deld.select("doc_id").write.mode("overwrite").parquet(
-        os.path.join(seg_dir, "deletes.parquet")
-    )
-    deld.unpersist()
-
-    docmeta = ids.join(
-        flat.groupBy("doc_id").agg(F.first("dl").alias("doc_len")), "doc_id", "left"
-    ).select(
-        "doc_id", "repo", "path", "commit", "lang",
-        F.sha2(F.col("content"), 256).alias("sha256"),
-        F.coalesce(F.col("doc_len"), F.lit(0)).alias("doc_len"),
-    )
-    docmeta.write.mode("overwrite").parquet(os.path.join(seg_dir, "docmeta.parquet"))
 
     lex = flat.groupBy("term").agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
     lex.write.mode("overwrite").parquet(os.path.join(seg_dir, "lexicon.parquet"))
@@ -338,8 +337,7 @@ def _build_segment_locked(
     )
 
     blocks = (
-        flat.repartition(n_parts, "term")
-        .sortWithinPartitions("term", "doc_id")
+        flat.sortWithinPartitions("term", "doc_id")
         .mapInArrow(
             _make_cold_encoder_arrow(cfg, seg_avgdl or 1.0), schema=POSTINGS_SCHEMA
         )
@@ -373,13 +371,30 @@ def _build_segment_locked(
         "n_docs": n,
         "total_dl": total_dl,
         "avgdl": seg_avgdl,
-        "max_doc_id": int(stats_row["max_id"] if stats_row["max_id"] is not None else -1),
+        "max_doc_id": int(st["max_id"] if st["max_id"] is not None else -1),
         "del_n_docs": del_n,
         "del_total_dl": del_dl,
         "ordinal": ordinal,
     })
     if id_col is None:
         ids.unpersist()
+
+
+def _write_tombstones(
+    prior: "SegmentedIndex", ids: DataFrame, seg_dir: str
+) -> tuple[int, int]:
+    """Write ``deletes.parquet``: the ``ids`` live in ``prior``. Returns
+    their (count, Σ doc_len) — what the merged stats subtract, kept
+    integer-exact — from an Observation on the same write: no second
+    job, and the ids stay distributed (never collected)."""
+    obs = Observation("tombstone_stats")
+    prior.docmeta.join(ids, "doc_id", "left_semi").observe(
+        obs, F.count(F.lit(1)).alias("n"), F.sum("doc_len").alias("dl")
+    ).select("doc_id").write.mode("overwrite").parquet(
+        os.path.join(seg_dir, "deletes.parquet")
+    )
+    st = obs.get
+    return int(st["n"]), int(st["dl"] or 0)
 
 
 def delete_docs(
@@ -446,17 +461,7 @@ def _delete_ids_df_locked(spark, base_index_dir, ids, cfg, seg_name):
         seg_name = f"seg-{base_num:08d}-del{n_sib}"
     seg_dir = os.path.join(segments_root(base_index_dir), seg_name)
     prior = _prior_view(spark, base_index_dir, ordinal, cfg)
-    deld = (
-        prior.docmeta.join(ids, "doc_id", "left_semi")
-        .select("doc_id", "doc_len")
-        .persist()
-    )
-    drow = deld.agg(F.count("*").alias("dn"), F.sum("doc_len").alias("ddl")).collect()[0]
-    del_n, del_dl = int(drow["dn"]), int(drow["ddl"] or 0)
-    deld.select("doc_id").write.mode("overwrite").parquet(
-        os.path.join(seg_dir, "deletes.parquet")
-    )
-    deld.unpersist()
+    del_n, del_dl = _write_tombstones(prior, ids, seg_dir)
     # a tombstone-only segment: no add-side tables (stats n_docs == 0
     # is what SegmentedIndex keys on to leave it out of every union)
     _commit_stats(seg_dir, {
@@ -753,16 +758,61 @@ class SegmentedIndex:
             )
         return self._live(df)
 
-    def lexicon_slice(self, terms, cols=LEXICON_COLS) -> pd.DataFrame:
-        """The merged lexicon rows of ``terms`` (``cols`` only). One
-        Spark job: idf stays the Spark-computed ``log`` of the merged
-        stats, the bytes a rebuild's lexicon holds — a driver-side numpy
-        ``log`` could differ in the last ulp and break rank identity."""
+    def _dead_flat(self) -> DataFrame | None:
+        """(term, tf) of every retained flat row whose version a later
+        tombstone killed — what the merged df/cf subtract. The one
+        selection behind both :attr:`lexicon` (aggregated in Spark) and
+        :meth:`lexicon_slice` (a query's terms, collected). None on an
+        append-only view."""
+        kill = self.kill_map
+        if kill is None:
+            return None
         return (
-            self.lexicon.filter(F.col("term").isin(sorted(set(terms))))
-            .select(*cols)
-            .toPandas()
+            self._union("flat", with_ord=True)
+            .join(F.broadcast(kill), "doc_id")
+            .filter(F.col("seg_ord") < F.col("kill_ord"))
+            .select("term", "tf")
         )
+
+    def lexicon_slice(self, terms, cols=LEXICON_COLS) -> pd.DataFrame:
+        """The merged lexicon rows of ``terms`` (``cols`` only), summed
+        on the driver: the base slice (:meth:`InvertedIndex.
+        lexicon_slice`) and each add segment's lexicon read with pyarrow
+        under a ``term`` filter, minus one (1, tf) per dead flat row of
+        those terms: a shuffle-free scan, run only when the view has
+        tombstones (2 jobs with the kill map's broadcast; none
+        append-only). idf is Spark's ``log`` over a local relation: the
+        optimizer folds it into the relation, so ``collect`` starts no
+        job, and the bytes are a rebuild's (a numpy ``log`` could differ
+        in the last ulp and break rank identity)."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        wanted = sorted(set(terms))
+        in_wanted = ds.field("term").isin(pa.array(wanted, pa.string()))
+        parts = [self.base.lexicon_slice(wanted, ("term", "df", "cf"))] + [
+            ds.dataset(os.path.join(d, "lexicon.parquet"))
+            .to_table(columns=["term", "df", "cf"], filter=in_wanted)
+            .to_pandas()
+            for _, d in self._add_segs
+        ]
+        lex = pd.concat(parts)
+        dead = self._dead_flat()
+        if dead is not None and len(lex):
+            rows = dead.filter(F.col("term").isin(sorted(set(lex["term"])))).collect()
+            if rows:  # a dead flat row takes back df 1 and cf tf
+                lost = pd.DataFrame(rows, columns=["term", "cf"])
+                lex = pd.concat([lex, lost.assign(df=-1, cf=-lost["cf"])])
+        lex = lex.groupby("term", as_index=False)[["df", "cf"]].sum()
+        lex = lex[lex["df"] > 0]
+        if not len(lex):
+            return parts[0].iloc[:0].assign(idf=0.0)[list(cols)]
+        rows = (
+            driver_df(self.spark, lex, "term string, df long, cf long")
+            .withColumn("idf", idf_col(self.n_docs))
+            .collect()
+        )
+        return pd.DataFrame([tuple(r) for r in rows], columns=LEXICON_COLS)[list(cols)]
 
     @property
     def lexicon(self) -> DataFrame:
@@ -776,14 +826,10 @@ class SegmentedIndex:
             .groupBy("term")
             .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
         )
-        kill = self.kill_map
-        if kill is not None:
-            dead = (
-                self._union("flat", with_ord=True)
-                .join(F.broadcast(kill), "doc_id")
-                .filter(F.col("seg_ord") < F.col("kill_ord"))
-                .groupBy("term")
-                .agg(F.count("*").alias("ddf"), F.sum("tf").alias("dcf"))
+        dead = self._dead_flat()
+        if dead is not None:
+            dead = dead.groupBy("term").agg(
+                F.count("*").alias("ddf"), F.sum("tf").alias("dcf")
             )
             merged = (
                 merged.join(dead, "term", "left")

@@ -3,8 +3,8 @@ them to ``spark.read.schema``, so a writer that drifts from its declared
 schema would read NULLs instead of failing. These tests pin each
 writer's output — build_index, build_segment (add and tombstone-only),
 compact and add_indexes — to the dict, pin the lexicon's sorted
-row-group layout, and pin the driver-side ``lexicon_slice`` to the
-Spark lexicon it replaces."""
+row-group layout, and pin the driver-side ``lexicon_slice`` (base
+index and segmented views) to the Spark lexicon it replaces."""
 
 import glob
 import os
@@ -44,7 +44,13 @@ def written(spark, tmp_path_factory):
     pdf.insert(0, "ext_id", range(len(pdf)))
     cfg = IndexConfig(build_partitions=2, hot_term_df=40, n_salts=2)
     base_dir = str(tmp / "base")
-    build_index(spark, spark.createDataFrame(pdf), cfg, base_dir, id_col="ext_id")
+    # two terms that only versions killed below carry: "alldeadterm"
+    # (docs 11-12, deleted) and "olddeadterm" (docs 0-2, whose updated
+    # versions drop it)
+    base_pdf = pdf.copy()
+    base_pdf.loc[[11, 12], "content"] += " alldeadterm"
+    base_pdf.loc[[0, 1, 2], "content"] += " olddeadterm"
+    build_index(spark, spark.createDataFrame(base_pdf), cfg, base_dir, id_col="ext_id")
     upd = pdf.iloc[:10].copy()
     upd["content"] = upd["content"] + " schemamarker"
     build_segment(
@@ -62,10 +68,18 @@ def written(spark, tmp_path_factory):
         halves.append(d)
     merged_dir = str(tmp / "merged")
     add_indexes(spark, halves, cfg, merged_dir)
+    # an append-only view: new ids only, so no tombstones
+    new = pdf.iloc[60:70].copy()
+    new["content"] = new["content"] + " appendonlyterm"
+    build_segment(
+        spark, spark.createDataFrame(new),
+        os.path.join(segments_root(halves[0]), "seg-00000000"), cfg,
+    )
     add_seg, del_seg = list_segments(base_dir)
     return {
         "base": base_dir, "add_seg": add_seg, "del_seg": del_seg,
         "compact": compact_dir, "merged": merged_dir, "view": view,
+        "append_view": SegmentedIndex.load(spark, halves[0], cfg),
     }
 
 
@@ -109,17 +123,26 @@ def test_segment_writers_match_declared_schemas(spark, written):
     )
 
 
-@pytest.mark.parametrize("which", ["base", "view"])
+@pytest.mark.parametrize("which", ["base", "view", "append_view"])
 def test_lexicon_slice_equals_spark_lexicon(spark, written, which):
+    """``lexicon_slice`` == the Spark lexicon's rows, idf bit for bit, on
+    a base index, a view with tombstones and an append-only view; terms
+    cover every merge case: live in base and segments, segment-only,
+    every version dead (the row is dropped), unseen."""
     from org_rdkit_lucene_spark.operators.build import InvertedIndex
 
     index = (
         InvertedIndex.load(spark, written["base"]) if which == "base"
-        else written["view"]
+        else written[which]
     )
-    if which == "view":
-        assert index.has_deletes
-    terms = ["schemamarker", "merg", "scorer", "index", "absentterm", "data"]
+    if which != "base":
+        assert index.segment_dirs and index.has_deletes == (which == "view")
+    dead = {"alldeadterm", "olddeadterm"}
+    only_seg = {"view": "schemamarker", "append_view": "appendonlyterm"}
+    terms = [
+        "schemamarker", "appendonlyterm", "merg", "scorer", "index", "absentterm",
+        "data", *sorted(dead),
+    ]
     for cols in [("term", "df", "cf", "idf"), ("term", "idf")]:
         got = index.lexicon_slice(terms, cols)
         want = (
@@ -128,11 +151,20 @@ def test_lexicon_slice_equals_spark_lexicon(spark, written, which):
             .toPandas()
         )
         assert len(got) > 0
+        assert "absentterm" not in set(got["term"])
+        if which == "base":
+            assert dead <= set(got["term"])
+        else:
+            assert only_seg[which] in set(got["term"])
+        if which == "view":
+            assert not dead & set(got["term"])
         pd.testing.assert_frame_equal(
             got.sort_values("term").reset_index(drop=True),
             want.sort_values("term").reset_index(drop=True),
+            check_exact=True,
         )
     assert len(index.lexicon_slice([], ("term", "df"))) == 0
+    assert len(index.lexicon_slice(["absentterm"], ("term", "df"))) == 0
 
 
 def _term_ranges(index_dir: str) -> list[tuple[str, str]]:

@@ -162,3 +162,44 @@ def test_multi_phrase_oracle_parity(mp_positions):
             want.astype({"doc_id": "int64", "n_occ": "int64"}),
             check_dtype=False,
         )
+
+
+def test_multi_phrase_oracle_parity_non_default_profile(spark, tmp_path):
+    """Positions built under the trigram profile: engine (profile
+    passed) == ``multi_phrase_sql(profile=...)``, while the
+    default-profile twin answers a different law."""
+    from org_rdkit_lucene_spark.config import ANALYZERS
+    from org_rdkit_lucene_spark.operators.positions import (
+        build_positions,
+        search_multi_phrase,
+    )
+    from org_rdkit_lucene_spark.oracle.sqlgen import multi_phrase_sql
+
+    prof = ANALYZERS["trigram"]
+    docs = spark.createDataFrame(pd.DataFrame(ROWS, columns=["doc_id", "content"]))
+    positions = build_positions(spark, docs, str(tmp_path / "tri"), profile=prof)
+    queries = [
+        (1, [["alpha", "beta"], ["gamma"]], 10),
+        (2, [["echo"], ["alpha"]], 10),
+        (3, [["pha"], ["bet", "gam"]], 10),
+    ]
+    got = (
+        search_multi_phrase(positions, queries, profile=prof)
+        .toPandas()
+        .sort_values(["query_id", "rank"])
+        .reset_index(drop=True)
+        .astype({"doc_id": "int64", "n_occ": "int64"})
+    )
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(ROWS, columns=["doc_id", "text"]))
+
+    def twin(**kw):
+        return (
+            con.execute(multi_phrase_sql(queries, **kw))
+            .df()
+            .astype({"doc_id": "int64", "n_occ": "int64"})
+        )
+
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(got, twin(profile=prof), check_dtype=False)
+    assert not got.equals(twin().astype(got.dtypes.to_dict()))

@@ -249,6 +249,54 @@ def test_percolate_syntax_oracle_parity(small_index, corpus_with_ids):
     )
 
 
+def test_percolate_syntax_oracle_parity_non_default_profile(
+    spark, small_pdf, tmp_path
+):
+    """The twin takes the index's analyzer: under the trigram profile,
+    engine == ``percolate_syntax_sql(profile=...)``, while the
+    default-profile twin answers a different law."""
+    import duckdb
+
+    from org_rdkit_lucene_spark.config import ANALYZERS, IndexConfig
+    from org_rdkit_lucene_spark.operators.build import build_index
+    from org_rdkit_lucene_spark.oracle.sqlgen import percolate_syntax_sql
+    from org_rdkit_lucene_spark.streaming.percolate import percolate_syntax
+
+    prof = ANALYZERS["trigram"]
+    pdf = small_pdf.iloc[:120].reset_index(drop=True)
+    pdf.insert(0, "ext_id", range(len(pdf)))
+    cfg = IndexConfig(build_partitions=2, tokenizer=prof)
+    index = build_index(
+        spark, spark.createDataFrame(pdf), cfg, str(tmp_path / "tri"), id_col="ext_id"
+    )
+    docs = spark.createDataFrame(
+        pdf.rename(columns={"ext_id": "doc_id"})[["doc_id", "content"]]
+    )
+    cols = ["doc_id", "query_id", "score_q", "n_matched"]
+    got = (
+        percolate_syntax(index, docs, SYNTAX_QUERIES)
+        .toPandas()[cols]
+        .astype("int64")
+        .sort_values(["query_id", "doc_id"])
+        .reset_index(drop=True)
+    )
+    con = duckdb.connect()
+    con.register("documents", pdf.rename(columns={"ext_id": "doc_id", "content": "text"}))
+
+    def twin(**kw):
+        return (
+            con.execute(percolate_syntax_sql(SYNTAX_QUERIES, **kw))
+            .df()[cols]
+            .astype("int64")
+            .sort_values(["query_id", "doc_id"])
+            .reset_index(drop=True)
+        )
+
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(got, twin(profile=prof))
+    assert not got.equals(twin())
+
+
 def test_percolate_syntax_stream_matches_batch(
     small_index, corpus_with_ids, tmp_path
 ):

@@ -5,14 +5,16 @@ from-scratch rebuild over the updated corpus, on both query paths;
 compaction must fold segments + tombstones into an index byte-identical
 to that rebuild."""
 
+import json
 import os
+import shutil
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from org_rdkit_lucene_spark.config import IndexConfig
-from org_rdkit_lucene_spark.operators.build import build_index
+from org_rdkit_lucene_spark.operators.build import build_index, empty_df
 from org_rdkit_lucene_spark.operators.query import hit_counts, search
 from org_rdkit_lucene_spark.operators.wand import search_wand
 from org_rdkit_lucene_spark.sources.fixtures import make_corpus_pdf
@@ -241,6 +243,80 @@ def test_duplicate_ids_within_batch_rejected(upsert_setup):
             id_col="ext_id",
             base_index_dir=upsert_setup["base_dir"],
         )
+
+
+@pytest.fixture(scope="module")
+def small_base(spark, tmp_path_factory):
+    """A 60-doc base index and its search answers; tests copy the dir
+    before writing to it."""
+    tmp = tmp_path_factory.mktemp("small_base")
+    pdf = make_corpus_pdf(n_docs=60, seed=29)
+    pdf.insert(0, "ext_id", range(len(pdf)))
+    cfg = IndexConfig(build_partitions=2)
+    base_dir = str(tmp / "base")
+    build_index(spark, spark.createDataFrame(pdf), cfg, base_dir, id_col="ext_id")
+    qs = [(1, "merg scorer", 10), (2, "token pars hash", 10)]
+    view = SegmentedIndex.load(spark, base_dir, cfg)
+    return {"dir": base_dir, "pdf": pdf, "cfg": cfg, "qs": qs,
+            "answers": _sorted(search(view, qs))}
+
+
+def _copy_base(small_base, tmp_path) -> str:
+    d = str(tmp_path / "idx")
+    shutil.copytree(small_base["dir"], d)
+    return d
+
+
+def test_rejected_batch_leaves_view_unchanged(spark, small_base, tmp_path):
+    """The uniqueness check reads the docmeta write's Observation, so a
+    rejected batch leaves a half-written segment dir behind. Without
+    ``stats.json`` it is never listed: the view answers as before. Both
+    paths: a repeated id (id_col) and a repeated NEW natural key, which
+    the engine would otherwise give two fresh doc_ids."""
+    cfg, pdf, qs = small_base["cfg"], small_base["pdf"], small_base["qs"]
+    base_dir = _copy_base(small_base, tmp_path)
+    new_key = pdf.iloc[[3, 3]].assign(path=pdf["path"].iloc[3] + ".new")
+    batches = [
+        ("ext_id", pdf.iloc[[1, 1, 2]]),
+        (None, pd.concat([pdf.iloc[[2]], new_key]).drop(columns=["ext_id"])),
+    ]
+    for i, (id_col, batch) in enumerate(batches):
+        seg = os.path.join(segments_root(base_dir), f"seg-{i:08d}")
+        with pytest.raises(ValueError, match="not unique"):
+            build_segment(spark, spark.createDataFrame(batch), seg, cfg, id_col=id_col)
+        assert os.path.isdir(seg) and not os.path.exists(os.path.join(seg, "stats.json"))
+        assert list_segments(base_dir) == []
+        view = SegmentedIndex.load(spark, base_dir, cfg)
+        assert view.n_docs == len(pdf)
+        pd.testing.assert_frame_equal(_sorted(search(view, qs)), small_base["answers"])
+
+
+def test_empty_writes_commit_zero_stats(spark, small_base, tmp_path):
+    """An Observation reports on an empty write too: an empty batch, an
+    empty delete and a delete of absent ids each return and commit
+    zero stats, and the view answers as before."""
+    cfg = small_base["cfg"]
+    base_dir = _copy_base(small_base, tmp_path)
+    seg = os.path.join(segments_root(base_dir), "seg-00000000")
+    schema = (
+        "ext_id long, repo string, path string, commit string, lang string, "
+        "content string"
+    )
+    build_segment(spark, empty_df(spark, schema), seg, cfg)
+    segs = [seg, delete_docs(spark, base_dir, [], cfg)]
+    segs.append(delete_docs(spark, base_dir, [10_000, 10_001], cfg))
+    for d in segs:
+        with open(os.path.join(d, "stats.json")) as f:
+            st = json.load(f)
+        assert [st[k] for k in ("n_docs", "total_dl", "del_n_docs", "del_total_dl")] == [
+            0, 0, 0, 0
+        ], (d, st)
+    view = SegmentedIndex.load(spark, base_dir, cfg)
+    assert view.segment_dirs == segs and not view.has_deletes
+    assert view.n_docs == len(small_base["pdf"])
+    pd.testing.assert_frame_equal(
+        _sorted(search(view, small_base["qs"])), small_base["answers"]
+    )
 
 
 def test_compaction_byte_identical_to_rebuild(upsert_setup):
